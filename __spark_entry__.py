@@ -3831,7 +3831,7 @@ QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, label) = 1
         "shard_stats": """
 SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 16 AS INT) AS shard,
        count(*) AS n_rows,
-       sum(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 8)) AS BIGINT)) AS checksum
+       CAST(sum(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 8)) AS BIGINT)) AS BIGINT) AS checksum
 FROM documents
 GROUP BY 1
 """,

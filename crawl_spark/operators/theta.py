@@ -70,6 +70,20 @@ def _hv(col) -> "F.Column":
     return F.conv(F.substring(h, 1, 13), 16, 10).cast("bigint")
 
 
+def _join_strata(
+    left: DataFrame, right: DataFrame, sc: list[str], how: str
+) -> DataFrame:
+    """Join on the strata columns. With ``strata=()`` each side holds
+    one global stratum, so the rows pair up by an explicit cross join
+    (a left join keeps its unmatched rows through an always-true
+    condition instead)."""
+    if sc:
+        return left.join(right, sc, how)
+    if how == "inner":
+        return left.crossJoin(right)
+    return left.join(right, F.lit(True), how)
+
+
 def theta_sketch(
     df: DataFrame,
     value_col: str = "url",
@@ -169,21 +183,20 @@ def theta_intersect(
     sc = _strata_cols(a, strata)
     ta = _agg_theta(a, sc, k).select(*sc, F.col("theta_hv").alias("__ta"))
     tb = _agg_theta(b, sc, k).select(*sc, F.col("theta_hv").alias("__tb"))
-    theta = ta.join(tb, sc if sc else None, "inner").select(
+    theta = _join_strata(ta, tb, sc, "inner").select(
         *sc, F.least("__ta", "__tb").alias("__theta")
     )
+    pairs = a.select(*sc, "hv").join(b.select(*sc, "hv"), [*sc, "hv"], "inner")
     common = (
-        a.select(*sc, "hv")
-        .join(b.select(*sc, "hv"), [*sc, "hv"] if sc else ["hv"], "inner")
-        .join(theta, sc if sc else None, "inner")
+        _join_strata(pairs, theta, sc, "inner")
         .where(F.col("hv") < F.col("__theta"))
         .groupBy(*sc, "__theta")
         .agg(F.count(F.lit(1)).alias("n_common_sample"))
     )
     # strata with no common hash below theta still get a 0 row (the
     # estimate "no observed overlap" is a statement, not absence)
-    base = theta.join(
-        common.select(*sc, "n_common_sample"), sc if sc else None, "left"
+    base = _join_strata(
+        theta, common.select(*sc, "n_common_sample"), sc, "left"
     ).select(
         *sc,
         F.coalesce("n_common_sample", F.lit(0)).alias("n_common_sample"),

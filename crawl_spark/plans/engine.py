@@ -133,9 +133,12 @@ _SEEN_SCHEMA = T.StructType(
     ]
 )
 
-# on-disk layout of a seen delta dir: hive-partitioned by the url_hash
+# on-disk layout of the seen log: per-round deltas (`seen_deltas/delta_*`)
+# are one flat dir of url_hash-sorted files; compacted dirs
+# (`seen_deltas/delta=compact_*`) are hive-partitioned by the url_hash
 # bucket (sb=pmod(url_hash, seen_buckets)/), files sorted by url_hash
-# within each bucket so parquet row-group min/max stats can skip
+# within each bucket so parquet row-group min/max stats can skip.
+# Both are read with this schema (flat dirs get sb computed)
 _SEEN_BUCKETED_SCHEMA = T.StructType(
     _SEEN_SCHEMA.fields + [T.StructField("sb", T.IntegerType())]
 )
@@ -194,10 +197,13 @@ class EngineConfig:
     # dirs on every seen read (file-listing cost grows per round);
     # compacting every ~32 rounds amortizes the O(|seen|) rewrite to
     # 1/32 of rounds while keeping reads at ≤32 dirs. 0 disables.
+    # Compaction is also what writes the bucketed (sb=) layout that the
+    # small-probe directory prune needs; per-round deltas are flat.
     seen_compact_min_deltas: int = 32
-    # seen-set hash-bucket count: every seen delta dir is hive-partitioned
-    # by sb = pmod(url_hash, seen_buckets) (SURVEY §4.2's bucket(hash, B)
-    # layout). The per-round membership check prunes its scan to the
+    # seen-set hash-bucket count: every compacted seen dir is hive-
+    # partitioned by sb = pmod(url_hash, seen_buckets) (SURVEY §4.2's
+    # bucket(hash, B) layout) and flat per-round deltas get the same sb
+    # computed on read. The membership check prunes its scan to the
     # buckets the round's links actually touch, and the Bloom bitmaps
     # share the same idea per host bucket.
     seen_buckets: int = 64
@@ -1045,7 +1051,7 @@ class CrawlEngine:
             )
 
     def _check_seen_buckets(self, manifest: dict, what: str) -> None:
-        """Bucketed seen deltas store ``sb = pmod(url_hash, B)`` as a
+        """Compacted seen dirs store ``sb = pmod(url_hash, B)`` as a
         hive partition VALUE — it is only meaningful under the B it was
         written with. Resuming with a different ``seen_buckets`` would
         make ``_links_minus_seen``'s partition prune (computed with the
@@ -1101,7 +1107,7 @@ class CrawlEngine:
 
     def _ensure_robots_dim(self) -> None:
         """Persist the robots table under ``workdir/robots_dim`` in the
-        seen log's bucketed layout (hive-partitioned by
+        compacted seen log's bucketed layout (hive-partitioned by
         rb = pmod(hash(host), robots_buckets), host-sorted files) so the
         per-round stamp probe is a partition-pruned SCAN — robots is
         never broadcast or shuffled by the round loop. Written once per
@@ -1502,52 +1508,53 @@ class CrawlEngine:
         }
 
     # -- seen delta log ----------------------------------------------------
-    # The seen set is an append-only log of hash-BUCKETED delta dirs:
-    # each dir is hive-partitioned by sb = pmod(url_hash, seen_buckets),
-    # with files range-laid-out and sorted by url_hash (parquet min/max
-    # row-group stats line up with the probe key). This is SURVEY §4.2's
-    # "partition seen by bucket(hash, B)" promise: the per-round
-    # membership check (``_links_minus_seen``) prunes its scan to the
-    # buckets the round's links touch and probes with a broadcast hash
-    # join — the seen side is only ever SCANNED, never shuffled.
+    # The seen set is an append-only log of delta dirs. Per-round deltas
+    # are one FLAT dir of url_hash-sorted files (bounded by one batch's
+    # fan-out: a handful of files, listed on the driver). Compaction
+    # rewrites the union as one hash-BUCKETED dir, hive-partitioned by
+    # sb = pmod(url_hash, seen_buckets) with files range-laid-out and
+    # sorted by url_hash (parquet min/max row-group stats line up with
+    # the probe key). This is SURVEY §4.2's "partition seen by
+    # bucket(hash, B)" promise where it pays — at 10^10 rows the
+    # membership check (``_links_minus_seen``) prunes the compacted scan
+    # to the buckets the round's links touch. Either way the seen side
+    # is only ever SCANNED, never shuffled.
     def _read_seen(self, rels: list[str]) -> DataFrame:
-        """The seen set = the delta-log dirs (merge-on-read), read as ONE
-        multi-path scan; carries the ``sb`` bucket column for partition
-        pruning.
+        """The seen set = the delta-log dirs (merge-on-read), read as at
+        most TWO multi-path scans; carries the ``sb`` bucket column for
+        partition pruning.
 
-        One scan, not a union of per-dir reads: the dirs are laid out as
-        hive partitions ``seen_deltas/delta=<name>/sb=NN`` so a single
-        ``parquet(p1, p2, …)`` with ``basePath=seen_deltas`` covers the
-        manifest's delta list.  A per-dir union would make every
-        downstream join fan out per branch — the membership check's
-        broadcast of the links batch was rebuilt once PER DELTA DIR
-        (measured: dedup_antijoin 2× slower by round 3 of a crawl) —
-        while the single scan keeps it one scan node + one broadcast
-        however many deltas the log holds."""
+        Bucketed (compacted) dirs are hive partitions
+        ``seen_deltas/delta=<name>/sb=NN``, so one ``parquet(p1, p2, …)``
+        with ``basePath=seen_deltas`` covers them. Flat dirs (per-round
+        deltas, and workdirs from before bucketing) cannot share that
+        scan — mixing them raises CONFLICTING_DIRECTORY_STRUCTURES, and
+        read alone they'd surface sb=NULL — so they get a second flat
+        scan with sb COMPUTED from url_hash (same pmod as the compaction
+        writer), which keeps ``sb``-filtered membership checks exact.
+        Multi-path scans, not a union of per-dir reads: a per-dir union
+        would make every downstream join fan out per branch — the
+        membership check's broadcast of the links batch was rebuilt once
+        PER DELTA DIR (measured: dedup_antijoin 2× slower by round 3 of a
+        crawl) — while two scans keep it bounded however many deltas the
+        log holds."""
         if not rels:
             return self.spark.createDataFrame([], _SEEN_BUCKETED_SCHEMA)
         base = os.path.join(self.config.workdir, "seen_deltas")
         cols = [f.name for f in _SEEN_BUCKETED_SCHEMA.fields]
-        # legacy dirs (pre-bucketing layout: flat `seen_deltas/<name>`,
-        # no delta=/sb= structure) cannot share the partitioned scan —
-        # mixing them raises CONFLICTING_DIRECTORY_STRUCTURES, and read
-        # alone they'd surface sb=NULL and be dropped by the bucket
-        # prune. They are read flat and their sb COMPUTED from url_hash
-        # (same pmod as the writer), so resumed old workdirs stay exact
-        # and even prune correctly (row-filter, not file-prune).
-        new_rels = [r for r in rels if os.path.basename(r).startswith("delta=")]
-        old_rels = [r for r in rels if not os.path.basename(r).startswith("delta=")]
+        hive_rels = [r for r in rels if os.path.basename(r).startswith("delta=")]
+        flat_rels = [r for r in rels if not os.path.basename(r).startswith("delta=")]
         parts = []
-        if new_rels:
-            paths = [os.path.join(self.config.workdir, rel) for rel in new_rels]
+        if hive_rels:
+            paths = [os.path.join(self.config.workdir, rel) for rel in hive_rels]
             parts.append(
                 self.spark.read.option("basePath", base)
                 .schema(_SEEN_BUCKETED_SCHEMA)
                 .parquet(*paths)
                 .select(*cols)
             )
-        if old_rels:
-            paths = [os.path.join(self.config.workdir, rel) for rel in old_rels]
+        if flat_rels:
+            paths = [os.path.join(self.config.workdir, rel) for rel in flat_rels]
             parts.append(
                 self.spark.read.schema(_SEEN_SCHEMA)
                 .parquet(*paths)
@@ -1564,32 +1571,27 @@ class CrawlEngine:
             out = out.unionByName(p)
         return out
 
-    def _write_seen_delta(self, df: DataFrame, name: str, large: bool = False) -> str:
-        """Write one bucketed seen delta dir atomically; returns the
-        workdir-relative path the manifest should reference.
+    def _write_seen_delta(self, df: DataFrame, name: str) -> str:
+        """Compaction writer: write one BUCKETED seen dir atomically;
+        returns the workdir-relative path the manifest should reference.
 
-        Layout: partitionBy(sb) subdirs, files url_hash-sorted either
-        way. Per-round deltas (bounded by one batch's fan-out) hash-
-        repartition on sb alone — ≤B one-file tasks and, unlike a range
-        repartition, NO sampling pass over the input (a whole extra job
-        per round, measured ~0.6 s at bench scale). Compaction rewrites
-        the entire seen set, where intra-bucket parallelism matters more
-        than one saved job: `large=True` keeps the range layout on
-        (sb, url_hash) so every core gets a slice of the big buckets."""
+        Layout: partitionBy(sb) subdirs, files url_hash-sorted. The input
+        is the entire seen set, where intra-bucket parallelism matters:
+        the range layout on (sb, url_hash) gives every core a slice of
+        the big buckets. Per-round deltas do not come here — they go
+        through the flat ``_write_delta``."""
         rel = os.path.join("seen_deltas", "delta=" + name)
         final = os.path.join(self.config.workdir, rel)
         tmp = final + ".tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         B = self.config.seen_buckets
-        out = df.select(*[f.name for f in _SEEN_SCHEMA.fields]).withColumn(
-            "sb", F.pmod(F.col("url_hash"), F.lit(B)).cast("int")
+        out = (
+            df.select(*[f.name for f in _SEEN_SCHEMA.fields])
+            .withColumn("sb", F.pmod(F.col("url_hash"), F.lit(B)).cast("int"))
+            .repartitionByRange(max(B, self._parallelism), "sb", "url_hash")
+            .sortWithinPartitions("sb", "url_hash")
         )
-        if large:
-            out = out.repartitionByRange(max(B, self._parallelism), "sb", "url_hash")
-        else:
-            out = out.repartition(B, "sb")
-        out = out.sortWithinPartitions("sb", "url_hash")
         out.write.mode("overwrite").partitionBy("sb").parquet(tmp)
         if os.path.exists(final):  # replay of an uncommitted round
             shutil.rmtree(final)
@@ -1656,7 +1658,7 @@ class CrawlEngine:
 
           1. prune: collect the ≤seen_buckets distinct ``sb`` values the
              links hash into (tiny job) and filter the seen scan to those
-             hive partitions;
+             buckets (compacted dirs skip the others' sb= partitions);
           2. hits = pruned_seen ⋉ broadcast(links)  — a broadcast hash
              LEFT-SEMI join that streams the seen scan past a hash table
              of the links' (url_hash, url_canon) keys: no shuffle, no
@@ -1688,14 +1690,9 @@ class CrawlEngine:
             if not touched:
                 return links
             if len(touched) < B:
-                # sb IS NULL escape: deltas written by the pre-bucketing
-                # layout (resumed old workdirs) surface sb=NULL — they
-                # must always be scanned, not silently pruned away
-                # (dropping them would re-admit seen urls and break the
-                # never-re-enters invariant)
-                pruned = seen.filter(
-                    F.col("sb").isin(touched) | F.col("sb").isNull()
-                )
+                # compacted dirs skip untouched sb= partitions at listing
+                # time; flat deltas' computed sb filters rows instead
+                pruned = seen.filter(F.col("sb").isin(touched))
         hits = pruned.select("url_hash", "url_canon").join(
             F.broadcast(probe), ["url_hash", "url_canon"], "leftsemi"
         )
@@ -1703,14 +1700,13 @@ class CrawlEngine:
             F.broadcast(hits.select("url_canon")), "url_canon", "left_anti"
         )
 
-    def _write_delta(
-        self, df: DataFrame, name: str, log: str = "seen_deltas", large: bool = False
-    ) -> str:
-        """Write one delta dir atomically (tmp + rename); returns the
+    def _write_delta(self, df: DataFrame, name: str, log: str = "seen_deltas") -> str:
+        """Write one flat delta dir atomically (tmp + rename); returns the
         workdir-relative path the manifest should reference. Seen deltas
-        route through the bucketed writer."""
+        keep the seen columns only, url_hash-sorted within each file."""
         if log == "seen_deltas":
-            return self._write_seen_delta(df, name, large=large)
+            df = df.select(*[f.name for f in _SEEN_SCHEMA.fields])
+            df = df.sortWithinPartitions("url_hash")
         rel = os.path.join(log, name)
         final = os.path.join(self.config.workdir, rel)
         tmp = final + ".tmp"
@@ -2143,13 +2139,9 @@ class CrawlEngine:
             # which the round replay overwrites — Iceberg orphan-file
             # semantics)
             delta_rel = self._write_delta(seen_delta, "delta_%05d" % r)
-            delta_abs = os.path.join(cfg.workdir, delta_rel)
-            # bucketed layout: parquet files live under sb=*/ subdirs —
-            # lineage records bucket-relative paths
             lineage["seen"] = sorted(
-                os.path.join(os.path.relpath(dirpath, delta_abs), f)
-                for dirpath, _, files in os.walk(delta_abs)
-                for f in files
+                f
+                for f in os.listdir(os.path.join(cfg.workdir, delta_rel))
                 if f.endswith(".parquet")
             )
             tick("write_seen_delta")
@@ -2224,8 +2216,8 @@ class CrawlEngine:
                 cfg.seen_compact_min_deltas
                 and len(seen_rels_next) >= cfg.seen_compact_min_deltas
             ):
-                compact_rel = self._write_delta(
-                    self._read_seen(seen_rels_next), "compact_%05d" % r, large=True
+                compact_rel = self._write_seen_delta(
+                    self._read_seen(seen_rels_next), "compact_%05d" % r
                 )
                 compacted_away = seen_rels_next
                 seen_rels_next = [compact_rel]
@@ -2241,8 +2233,8 @@ class CrawlEngine:
 
             # seen_delta projects the localCheckpointed new_rows — count
             # THAT (cheap RDD count), not a disk re-read of the freshly
-            # written 64-subdir delta (file listing + scan, a whole extra
-            # job per round for a number already in memory)
+            # written delta (file listing + scan, a whole extra job per
+            # round for a number already in memory)
             n_new = seen_delta.count()
             c["scheduled"] = n_new
             c["deduped"] = n_valid - n_new
@@ -2274,7 +2266,7 @@ class CrawlEngine:
                 # politeness-input fingerprint: predicate-deletes in the
                 # frontier log are only valid under these robots rules
                 "robots": self.robots_fingerprint(),
-                # bucketed seen deltas' sb values are only meaningful
+                # compacted seen dirs' sb values are only meaningful
                 # under this B — pinned and asserted on resume/read
                 "seen_buckets": cfg.seen_buckets,
                 # frontier rows carry stamped robots columns (round 4) —

@@ -82,19 +82,29 @@ def test_read_transcript_matches_driver_copy(crawl_pair, spark):
     assert result.read_transcript(spark) == result.transcript
 
 
-def test_seen_deltas_hash_bucketed(crawl_pair, spark):
-    """SURVEY §4.2 layout promise: every seen delta dir is hive-
-    partitioned by sb = pmod(url_hash, seen_buckets), so the membership
-    check can prune its scan to the buckets a round's links touch."""
+def test_seen_deltas_hash_bucketed(crawl_pair, spark, tmp_path):
+    """SURVEY §4.2 layout promise: per-round seen deltas are flat dirs of
+    url_hash-sorted files, every compacted dir is hive-partitioned by
+    sb = pmod(url_hash, seen_buckets), and the seen read carries that sb
+    for every row — so the membership check can prune its scan to the
+    buckets a round's links touch."""
+    import dataclasses
     import os
 
     from pyspark.sql import functions as F
 
     _, result, engine = crawl_pair
     droot = os.path.join(result.workdir, "seen_deltas")
-    for d in os.listdir(droot):
-        subs = [s for s in os.listdir(os.path.join(droot, d)) if s.startswith("sb=")]
-        assert subs, "delta dir %s is not bucketed" % d
+    names = os.listdir(droot)
+    assert names
+    for d in names:
+        assert not d.startswith("delta="), "per-round delta %s is bucketed" % d
+        entries = [os.path.join(droot, d, e) for e in os.listdir(os.path.join(droot, d))]
+        assert not any(os.path.isdir(e) for e in entries), "delta %s has subdirs" % d
+        files = [e for e in entries if e.endswith(".parquet")]
+        assert files, "delta dir %s holds no parquet files" % d
+        for f in files:
+            assert pd.read_parquet(f)["url_hash"].is_monotonic_increasing, f
     # the sb column equals pmod(url_hash, B) for every row
     B = engine.config.seen_buckets
     seen = engine.read_table("seen")
@@ -102,6 +112,24 @@ def test_seen_deltas_hash_bucketed(crawl_pair, spark):
         F.col("sb") != F.pmod(F.col("url_hash"), F.lit(B)).cast("int")
     ).count()
     assert bad == 0
+    # compaction writes the bucketed layout: only sb= subdirs, whose
+    # partition value is pmod(url_hash, B) for every row
+    compactor = CrawlEngine(
+        spark,
+        spark.createDataFrame([], "url string, html binary"),
+        _registry(),
+        config=dataclasses.replace(engine.config, workdir=str(tmp_path)),
+    )
+    rel = compactor._write_seen_delta(seen, "compact_00000")
+    cdir = os.path.join(str(tmp_path), rel)
+    subs = [s for s in os.listdir(cdir) if os.path.isdir(os.path.join(cdir, s))]
+    assert subs and all(s.startswith("sb=") for s in subs), subs
+    compacted = compactor._read_seen([rel])
+    bad = compacted.filter(
+        F.col("sb") != F.pmod(F.col("url_hash"), F.lit(B)).cast("int")
+    ).count()
+    assert bad == 0
+    assert sorted(compacted.collect()) == sorted(seen.collect())
 
 
 def test_seen_set_exact(crawl_pair, spark):
@@ -280,7 +308,7 @@ def test_seen_delta_log_append_only(crawl_pair, spark):
     }
     # one delta per round, sized by that round's scheduled (new) urls
     for c in result.counters:
-        assert per_delta["delta=delta_%05d" % c["round"]] == c["scheduled"]
+        assert per_delta["delta_%05d" % c["round"]] == c["scheduled"]
     # disjoint appends: sizes sum to the full seen set (no rewrite ever)
     assert sum(per_delta.values()) == len(golden.seen)
 
@@ -462,13 +490,70 @@ def test_crash_between_delta_write_and_commit_replays_cleanly(
     # simulate the crash window during round 2: delete the committed
     # round dir (manifest gone) but leave its delta dirs as orphans
     shutil.rmtree(os.path.join(wd, "round_00002"))
-    assert os.path.isdir(os.path.join(wd, "seen_deltas", "delta=delta_00002"))  # orphan
+    assert os.path.isdir(os.path.join(wd, "seen_deltas", "delta_00002"))  # orphan
     assert os.path.isdir(os.path.join(wd, "frontier_log", "add_00002"))  # orphan
     engine = mk()
     result = engine.run(seeds, max_rounds=4, resume=True)  # replays r2, runs r3
     assert result.transcript == golden.transcript
     seen = {row.url_canon for row in engine.read_table("seen").collect()}
     assert seen == golden.seen
+
+
+def test_resume_across_hive_layout_seen_deltas(spark, tiny_fixture, tmp_path_factory):
+    """Workdirs written before per-round seen deltas went flat hold them
+    in the hive layout (``seen_deltas/delta=<name>/sb=NN``), next to a
+    compacted dir. Resuming such a MIXED log — hive per-round deltas, a
+    hive compacted dir, then this run's flat deltas, and finally a
+    compaction of all of them — must match the reference model's
+    transcript and seen set exactly."""
+    import json
+    import os
+    import shutil
+
+    pages, seeds, robots = _load(tiny_fixture)
+    golden = _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=5)
+    wd = str(tmp_path_factory.mktemp("hive_seen_work"))
+    mk = lambda min_deltas: CrawlEngine(  # noqa: E731
+        spark,
+        spark.read.parquet(tiny_fixture["pages"]),
+        _registry(),
+        robots_df=spark.read.parquet(tiny_fixture["robots"]),
+        config=EngineConfig(
+            batch_cap=40, max_rounds=5, workdir=wd, keep_rounds=99,
+            seen_compact_min_deltas=min_deltas, collect_transcript=True),
+    )
+    old = mk(0)
+    old.run(seeds, max_rounds=3)  # rounds 0..2, no compaction
+    mpath = os.path.join(wd, "round_00002", "manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    flat = manifest["seen_deltas"]
+    assert flat == ["seen_deltas/delta_seed"] + [
+        "seen_deltas/delta_%05d" % r for r in range(3)
+    ]
+    # rewrite the committed log in the bucketed layout: the first two
+    # deltas as one compacted dir, the rest as hive per-round deltas
+    rels = [old._write_seen_delta(old._read_seen(flat[:2]), "compact_00000")]
+    for rel in flat[2:]:
+        rels.append(old._write_seen_delta(old._read_seen([rel]), os.path.basename(rel)))
+    for rel in flat:
+        shutil.rmtree(os.path.join(wd, rel))
+    assert rels == ["seen_deltas/delta=compact_00000", "seen_deltas/delta=delta_00001",
+                    "seen_deltas/delta=delta_00002"]
+    manifest["seen_deltas"] = rels
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+
+    # round 3 probes the mixed log and appends a flat delta; round 4
+    # compacts hive and flat dirs together
+    engine = mk(5)
+    result = engine.run(seeds, max_rounds=5, resume=True)
+    assert result.transcript == golden.transcript
+    assert engine._seen_rels == ["seen_deltas/delta=compact_00004"]
+    seen = {row.url_canon for row in engine.read_table("seen").collect()}
+    assert seen == golden.seen
+    r3 = engine.snapshots()[3]["seen_deltas"]
+    assert r3 == rels + ["seen_deltas/delta_00003"]
 
 
 def test_middleware_chain_aborts_before_fetch(spark, tiny_fixture, tmp_path_factory):
@@ -687,9 +772,12 @@ def test_bucketed_pages_fetch_pruning(spark, tiny_fixture, tmp_path_factory):
 
 def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
     """_links_minus_seen: probes at or below seen_prune_max_probe prune
-    the seen scan to the touched sb buckets (PartitionFilters, no row
-    filter on sb); larger probes skip the bucket-collect job entirely.
-    Both strategies must equal the plain shuffle anti-join exactly."""
+    the seen scan to the touched sb buckets (PartitionFilters on the
+    compacted dirs' sb= partitions); larger probes skip the bucket-
+    collect job entirely. Both strategies must equal the plain shuffle
+    anti-join exactly."""
+    import os
+
     from pyspark.sql import functions as F
 
     pages, seeds, robots = _load(tiny_fixture)
@@ -699,11 +787,15 @@ def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
-            batch_cap=40, max_rounds=3,
+            batch_cap=40, max_rounds=3, seen_compact_min_deltas=2,
             workdir=str(tmp_path_factory.mktemp("probe_work")),
         ),
     )
     engine.run(seeds)
+    # the bucketed layout is the compaction output: the log's base is one
+    assert any(
+        os.path.basename(rel).startswith("delta=compact_") for rel in engine._seen_rels
+    ), engine._seen_rels
     seen = engine.read_table("seen")
     # probe = half already-seen urls, half fresh — exercises both join outcomes
     half = seen.select("url_canon", "url_hash").limit(8)
@@ -721,13 +813,15 @@ def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
     pruned = engine._links_minus_seen(links, seen, n)  # 16 ≤ 2048 → prunes
     assert sorted(r.url_canon for r in pruned.select("url_canon").collect()) == expected
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # bucket prune + the defensive isnull(sb) escape for legacy rows:
-    # PartitionFilters: [(sb# IN (...) OR isnull(sb#))] — the IN list
-    # prunes files (isnull matches no hive dir), rows stay exact
-    pf = [
-        ln for ln in plan.splitlines()
-        if "PartitionFilters: [" in ln and "sb#" in ln and " IN (" in ln
-    ]
+    # bucket prune: PartitionFilters: [sb# IN (...)] (printed as INSET
+    # past 10 buckets) skips untouched sb= dirs at listing time
+    def sb_pruned(ln):
+        return (
+            "PartitionFilters: [" in ln and "sb#" in ln
+            and (" IN (" in ln or " INSET " in ln)
+        )
+
+    pf = [ln for ln in plan.splitlines() if sb_pruned(ln)]
     assert pf, plan  # the seen scan is bucket-pruned at listing time
     assert "Exchange hashpartitioning(url_canon" not in plan  # seen never shuffles
 
@@ -735,10 +829,7 @@ def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
     unpruned = engine._links_minus_seen(links, seen, n)
     assert sorted(r.url_canon for r in unpruned.select("url_canon").collect()) == expected
     plan2 = unpruned._jdf.queryExecution().executedPlan().toString()
-    assert not any(  # full scan: no sb prune in either filter form
-        "PartitionFilters: [" in ln and "sb#" in ln and " IN (" in ln
-        for ln in plan2.splitlines()
-    )
+    assert not any(sb_pruned(ln) for ln in plan2.splitlines())  # full scan
     assert "Exchange hashpartitioning(url_canon" not in plan2  # no seen shuffle
 
 
@@ -769,7 +860,7 @@ def test_seen_probe_scans_prebucketing_deltas(spark, tiny_fixture, tmp_path_fact
     )
     rel = os.path.join("seen_deltas", "delta_legacy")
     old.write.parquet(os.path.join(wd, rel))
-    # MIXED layout: legacy flat dir + this run's bucketed delta= dirs
+    # legacy flat dir (two columns only) + this run's flat per-round deltas
     engine._seen_rels = engine._seen_rels + [rel]
     seen = engine._read_seen(engine._seen_rels)
     B = engine.config.seen_buckets

@@ -1,6 +1,7 @@
 """KMV/theta sketch: exact-regime intersection equals the true
 overlap, saturated-regime error bounds, merge ≡ whole, DuckDB oracle
-parity in both regimes, disjoint/missing-stratum semantics, guards."""
+parity in both regimes (per stratum and for one global stratum),
+disjoint/missing-stratum semantics, guards."""
 
 import duckdb
 import pandas as pd
@@ -130,6 +131,46 @@ def test_merge_equals_whole_and_disjoint_zero(spark):
     }
     assert out["en"] == (0, 0.0)
     assert "fr" not in out and "de" not in out
+
+
+def test_global_stratum_matches_oracle(spark):
+    """strata=(): one global stratum — sketch, merge and intersection
+    take their no-strata paths (ranked_topk, cross joins) and still
+    hash-match the DuckDB oracle in both regimes; a disjoint pair gives
+    the one 0-overlap row."""
+    A, B, _ = _campaigns()
+    dfa = spark.createDataFrame(A, "lang string, url string")
+    dfb = spark.createDataFrame(B, "lang string, url string")
+    con = duckdb.connect()
+    con.register("sa", pd.DataFrame(A, columns=["lang", "url"]))
+    con.register("sb", pd.DataFrame(B, columns=["lang", "url"]))
+    true = len({u for _, u in A} & {u for _, u in B})
+    for k in (4096, 256):
+        ka = theta_sketch(dfa, "url", (), k)
+        kb = theta_sketch(dfb, "url", (), k)
+        got = [tuple(r) for r in theta_intersect(ka, kb, (), k).collect()]
+        want = con.execute(
+            theta_intersect_oracle_sql(
+                "SELECT url FROM sa", "SELECT url FROM sb", "url", (), k
+            )
+        ).fetchall()
+        assert got == [tuple(r) for r in want], k
+        if k == 4096:
+            assert got == [(true, float(true))]  # θ=1: exact count
+    h1 = dfa.where(F.crc32("url") % 2 == 0)
+    m = theta_merge(
+        theta_sketch(h1, "url", (), 256),
+        theta_sketch(dfa.subtract(h1), "url", (), 256),
+        strata=(),
+        k=256,
+    )
+    key = lambda d: sorted(r["hv"] for r in d.collect())
+    assert key(m) == key(theta_sketch(dfa, "url", (), 256))
+    other = spark.createDataFrame([("en", "https://q/x")], "lang string, url string")
+    out = theta_intersect(
+        theta_sketch(dfa, "url", (), 256), theta_sketch(other, "url", (), 256), (), 256
+    ).collect()
+    assert [tuple(r) for r in out] == [(0, 0.0)]
 
 
 def test_guards(spark):

@@ -1,9 +1,10 @@
 """Seen-log compaction read-side evidence (round-3 default:
 seen_compact_min_deltas=32).
 
-Builds a delta log of N_DELTAS bucketed dirs via the engine's own
-writer, then times a full seen read (count through _read_seen) against
-(a) the raw N-dir log and (b) the compacted single dir — the file-
+Builds a delta log of N_DELTAS flat per-round dirs via the engine's own
+writer (_write_delta), then times a full seen read (count through
+_read_seen) against (a) the raw N-dir log and (b) the single bucketed
+dir the compaction writer (_write_seen_delta) makes of it — the file-
 listing/metadata overhead a 200-round crawl would pay every round
 without compaction.
 
@@ -49,7 +50,7 @@ def main() -> None:
     t0 = time.time()
     for i in range(n_deltas):
         rels.append(
-            eng._write_seen_delta(
+            eng._write_delta(
                 synth(spark, rows, "d%d" % i, parts=4).withColumn(
                     "first_round", F.lit(i)
                 ),

@@ -150,6 +150,9 @@ def main() -> None:
             # the small-dim broadcast fast path; force the pruned-scan
             # probe so the captured plan shows the >cap strategy
             robots_broadcast_max=0,
+            # per-round seen deltas are flat; compaction writes the
+            # sb-bucketed layout the membership-check plan (§9) prunes
+            seen_compact_min_deltas=2,
         ),
     )
     eng.run(pd.read_parquet(fx["seeds"]))
@@ -166,7 +169,7 @@ def main() -> None:
         eng.read_table("frontier"),
     )
 
-    # 9. scan-side seen membership check over the real bucketed layout
+    # 9. scan-side seen membership check over the compacted bucketed layout
     links_demo = (
         eng.read_table("seen")
         .select("url_canon", "url_hash")
