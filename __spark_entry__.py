@@ -143,11 +143,10 @@ def q_fifo_batch(spark, sf_dir):
     (memQueue.Get batch analog, queue_memory.go:27-33).
 
     Routed through the distributed ``ranked_topk`` (local prune → one
-    bounded range shuffle → partition-offset stamping) rather than a
-    global ``row_number() OVER (ORDER BY …)`` — the unpartitioned window
-    funnels the whole table through one task, the plan this repo bans at
-    10^10 rows (the engine's bounded ``topk_serial_max`` path is the
-    only sanctioned use)."""
+    bounded range shuffle → partition-offset stamping), the engine's
+    batch selector, rather than a global ``row_number() OVER (ORDER BY
+    …)`` — the unpartitioned window funnels the whole table through one
+    task, the plan this repo bans at 10^10 rows."""
     from crawl_spark.operators.topk import ranked_topk
 
     e = _t(spark, sf_dir, "events")
@@ -244,8 +243,9 @@ def q_seq_stamp(spark, sf_dir):
     A global ``row_number() OVER (ORDER BY ...)`` would be correct but
     funnels the whole table through one task — the plan you must NOT run
     at 10^10 rows. ``ranked_topk`` with k ≥ |table| is the scale-safe
-    equivalent: range-shuffle on the key, per-partition counts prefix-
-    summed into offsets, position = offset + local index."""
+    equivalent (and the engine's only way to stamp ``batch_pos``):
+    range-shuffle on the key, per-partition counts prefix-summed into
+    offsets, position = offset + local index."""
     from crawl_spark.operators.topk import ranked_topk
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")

@@ -229,13 +229,6 @@ def run_crawl(spark, pages_dir: str, n_pages: int, rounds: int = 3) -> dict:
             workdir=wd,
             collect_transcript=False,
             keep_rounds=1,
-            # bench the 100 TB shape: route the global cap through the
-            # distributed ranked_topk, not the bounded-serial
-            # orderBy+limit fast path — also keeps the bench tail free
-            # of WindowExec single-partition warnings (the serial path
-            # is sanctioned only because its input is pre-limited to
-            # batch_cap ≤ topk_serial_max rows)
-            topk_serial_max=0,
         ),
     )
     seed_urls = [

@@ -1222,13 +1222,19 @@ def effective_diameter(nf, q: float = 0.9) -> float:
 
 def neighborhood_function_oracle_sql(edges_cte: str, max_t: int = 3) -> str:
     """DuckDB twin of :func:`neighborhood_function` with
-    ``rel_tol=0.0`` (no early stop): the iteration is UNROLLED as
-    ``max_t`` join+MAX CTE stages (the `hits_oracle_sql` technique for
-    iterative operators), the register rank is the identical md5 hex
-    split + ``length(bin(w))``, the per-node estimate the identical
-    m=256 float expression, and the per-t total the identical
-    round-6 DECIMAL sum — so the whole curve hash-matches bit for
-    bit."""
+    ``rel_tol=0.0``: the iteration is UNROLLED as ``max_t`` join+MAX
+    CTE stages (the `hits_oracle_sql` technique for iterative
+    operators), the register rank is the identical md5 hex split +
+    ``length(bin(w))``, the per-node estimate the identical m=256 float
+    expression, and the per-t total the identical round-6 DECIMAL sum.
+
+    Twin contract: the oracle always emits t = 0..max_t, while the
+    Spark loop stops at the first t whose registers equal t-1's (exact
+    saturation). So Spark's rows are a bit-exact PREFIX of the
+    oracle's, and every oracle row past Spark's last t = T repeats
+    N(T) — registers no longer change, so neither does the estimate.
+    On a graph that does not saturate within ``max_t`` the two curves
+    are identical."""
     est = """
   SELECT {t} AS t,
          round(CAST(SUM(CAST(round(

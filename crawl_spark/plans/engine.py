@@ -8,7 +8,7 @@ DataFrame dataflow:
       live     = frontier minus expired (deadline <= r)
       allowed  = live minus robots-disallowed           (broadcast join)
       ranked   = row_number over (partition host, FIFO key) <= host budget
-      batch    = ranked orderBy FIFO key limit batch_cap (TakeOrdered)
+      batch    = exact top batch_cap by FIFO key (operators/topk.ranked_topk)
       fetched  = batch JOIN pages on url_canon           (broadcast batch)
       extract  = one-parse mapInPandas: per-handler text + links
       new      = explode links -> canonicalize -> in-round dedup
@@ -28,9 +28,12 @@ Scale design notes (100 TB pages, 10^10-row frontier):
   pruning when the pages table is bucket-partitioned.
 - The politeness window shuffles the frontier once on `host`; the
   host-budget filter and FIFO ranking are partition-local after that
-  single shuffle. `batch_pos` is a window over <= batch_cap rows (a
-  bounded single-partition window, the same backpressure bound as the
-  reference's queue capacity, crawler.go:69).
+  single shuffle. The global cap and `batch_pos` come from ranked_topk:
+  a partition-local prune to <= batch_cap rows per partition, one bounded
+  range shuffle, and per-partition counts prefix-summed on the driver —
+  no TakeOrdered merge and no single-partition window at any cap
+  (batch_cap is the reference's queue-capacity backpressure bound,
+  crawler.go:69).
 - Each round is materialized to parquet (the snapshot/checkpoint layer),
   which truncates plan lineage — round N's plan never re-executes round
   N-1's DAG.
@@ -43,7 +46,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import InitVar, dataclass, field
 from typing import Iterator
 
 import pandas as pd
@@ -172,10 +175,11 @@ class EngineConfig:
     # the crawl's O(batch) OUTPUTS, not caches — never reaped.
     keep_rounds: int = 2
     default_crawl_delay: float = 0.0
-    timing: bool = False  # print per-phase wall times (perf debugging)
-    # batch caps at or below this use the serial TakeOrdered+window
-    # selection (fewer jobs); above it the distributed ranked_topk
-    topk_serial_max: int = 10_000
+    # accepted and ignored: every batch is selected by ranked_topk. The
+    # benchmark harness (frontierbench/measure.py) is the last caller
+    # that still passes it; not a field, so it is neither stored nor
+    # listed by dataclasses.fields().
+    topk_serial_max: InitVar[int | None] = None
     # politeness skew: hosts with at least this many frontier rows are
     # routed through a distributed per-host top-k instead of the
     # groupBy(host) window (0/None disables detection)
@@ -279,14 +283,6 @@ class EngineConfig:
     # one dir (same amortization contract as seen_compact_min_deltas).
     # 0 disables compaction.
     host_state_compact_min_deltas: int = 32
-    # optionally cache the merged frontier view for each round: the round
-    # scans it ~4× (counts, politeness rank, batch selection, errors) and
-    # each scan re-runs the log merge. Measured at bench scale the merge
-    # is NOT the bottleneck (union + broadcast anti-join over parquet
-    # scans — identical A/B walls), and at 10^10 rows pinning the
-    # frontier in executor memory is its own cost — so default OFF; turn
-    # on for memory-rich clusters to trade cache space for scan I/O.
-    cache_frontier: bool = False
 
 
 @dataclass
@@ -548,12 +544,12 @@ class CrawlEngine:
         frontier: DataFrame,
         seen: DataFrame,
         host_state: DataFrame,
+        tick,
     ):
         cfg = self.config
         c = {"round": r, "fetched": 0, "deduped": 0, "deferred_by_politeness": 0,
              "expired": 0, "errors": 0, "scheduled": 0}
         errors_parts = []
-        tick = self._make_tick(r)
 
         # 1. expire (deadline drop, nsq/nsqcrawl/queue.go:90-94).
         expired_cond = F.col("deadline").isNotNull() & (F.col("deadline") <= r)
@@ -730,24 +726,14 @@ class CrawlEngine:
             survivors = live
             n_allowed = agg.n - agg.n_expired  # no extra job
 
-        # 5. global cap + batch_pos stamp. Two physically different,
-        # logically identical strategies (keys are unique, so both give
-        # the same batch):
-        # - small caps: orderBy+limit (TakeOrdered) + one bounded window
-        #   — fewest jobs, serial merge is trivial at this size;
-        # - large caps: distributed exact top-k (operators/topk.py) — no
-        #   TakeOrdered merge, no single-partition window; the only
-        #   serial data is one row-count per partition.
-        if cfg.batch_cap <= cfg.topk_serial_max:
-            batch = survivors.orderBy(*FIFO_KEY).limit(cfg.batch_cap)
-            batch = batch.withColumn(
-                "batch_pos", F.row_number().over(Window.orderBy(*FIFO_KEY))
-            ).select(*_FRONTIER_COLS, "batch_pos")
-        else:
-            batch = ranked_topk(
-                survivors.select(*_FRONTIER_COLS), FIFO_KEY, cfg.batch_cap,
-                pos_col="batch_pos", num_partitions=self._parallelism,
-            )
+        # 5. global cap + batch_pos stamp: distributed exact top-k
+        # (operators/topk.py) — no TakeOrdered merge, no single-partition
+        # window; the only serial data is one row-count per partition.
+        # FIFO keys are unique, so the batch is the spec's exact one.
+        batch = ranked_topk(
+            survivors.select(*_FRONTIER_COLS), FIFO_KEY, cfg.batch_cap,
+            pos_col="batch_pos", num_partitions=self._parallelism,
+        )
         batch = batch.localCheckpoint(eager=True)  # reused 4×; bounded by cap
         n_batch = batch.count()
         c["deferred_by_politeness"] = n_allowed - n_batch
@@ -999,16 +985,18 @@ class CrawlEngine:
         return (frontier_adds, frontier_dels, seen_delta, host_state_delta,
                 errors_df, extracted, transcript_df, c, transcript, n_valid)
 
-    def _make_tick(self, r: int):
-        if not self.config.timing:
-            return lambda label: None
+    @staticmethod
+    def _make_tick(phase_s: dict):
+        """``tick(label)`` adds the wall seconds since the previous tick
+        (or since this call) to ``phase_s[label]`` — the round's
+        per-phase record, committed as the manifest's ``phase_s``."""
         import time as _t
 
-        last = [_t.time()]
+        last = [_t.perf_counter()]
 
         def tick(label: str) -> None:
-            now = _t.time()
-            print("    [r%d] %-14s %.2fs" % (r, label, now - last[0]), flush=True)
+            now = _t.perf_counter()
+            phase_s[label] = round(phase_s.get(label, 0.0) + now - last[0], 4)
             last[0] = now
 
         return tick
@@ -1310,17 +1298,28 @@ class CrawlEngine:
         )
 
     # -- snapshot catalog (Iceberg-style: ids, lineage, time travel) -------
-    def snapshots(self) -> list[dict]:
-        """All committed snapshot manifests, oldest first."""
+    def _load_manifest(self, r: int) -> dict:
+        """The committed manifest of round ``r``."""
+        mf = os.path.join(self.config.workdir, "round_%05d" % r, "manifest.json")
+        if not os.path.exists(mf):
+            raise FileNotFoundError("no committed snapshot r%05d" % r)
+        with open(mf) as f:
+            return json.load(f)
+
+    def _committed_rounds(self) -> list[int]:
+        """Rounds with a committed manifest in workdir, ascending."""
         if not os.path.isdir(self.config.workdir):
             return []
-        out = []
-        for d in sorted(os.listdir(self.config.workdir)):
-            mf = os.path.join(self.config.workdir, d, "manifest.json")
-            if d.startswith("round_") and not d.endswith(".tmp") and os.path.exists(mf):
-                with open(mf) as f:
-                    out.append(json.load(f))
-        return out
+        return sorted(
+            int(d.split("_")[1])
+            for d in os.listdir(self.config.workdir)
+            if d.startswith("round_") and not d.endswith(".tmp")
+            and os.path.exists(os.path.join(self.config.workdir, d, "manifest.json"))
+        )
+
+    def snapshots(self) -> list[dict]:
+        """All committed snapshot manifests, oldest first."""
+        return [self._load_manifest(r) for r in self._committed_rounds()]
 
     def read_table(self, name: str, snapshot: int | None = None) -> DataFrame:
         """Time-travel read: a state table (frontier/seen/host_state/
@@ -1335,9 +1334,7 @@ class CrawlEngine:
         if r is None:
             raise FileNotFoundError("no committed snapshot in %s" % self.config.workdir)
         if name == "frontier":
-            mf = os.path.join(self.config.workdir, "round_%05d" % r, "manifest.json")
-            with open(mf) as f:
-                manifest = json.load(f)
+            manifest = self._load_manifest(r)
             self._check_robots_fp(manifest, "read_table('frontier')")
             self._check_frontier_stamped(manifest, "read_table('frontier')")
             log = manifest["frontier_log"]
@@ -1353,9 +1350,7 @@ class CrawlEngine:
                 )
             return self._read_frontier(log, r)
         if name == "seen":
-            mf = os.path.join(self.config.workdir, "round_%05d" % r, "manifest.json")
-            with open(mf) as f:
-                manifest = json.load(f)
+            manifest = self._load_manifest(r)
             self._check_seen_buckets(manifest, "read_table('seen')")
             rels = manifest.get("seen_deltas", [])
             missing = [p for p in rels if not os.path.isdir(os.path.join(self.config.workdir, p))]
@@ -1366,9 +1361,7 @@ class CrawlEngine:
                 )
             return self._read_seen(rels)
         if name == "host_state":
-            mf = os.path.join(self.config.workdir, "round_%05d" % r, "manifest.json")
-            with open(mf) as f:
-                manifest = json.load(f)
+            manifest = self._load_manifest(r)
             # merge-on-read: the manifest lists the delta dirs whose
             # per-host MAX is the host-clock table at that snapshot
             # (next_time strictly increases per host — see the delta-log
@@ -1390,11 +1383,7 @@ class CrawlEngine:
             raise FileNotFoundError(
                 "table %r not present at snapshot r%05d (retention?)" % (name, r)
             )
-        schema = {
-            "host_state": _HOST_STATE_SCHEMA,
-        }.get(name)
-        reader = self.spark.read.schema(schema) if schema else self.spark.read
-        return reader.parquet(path)
+        return self.spark.read.parquet(path)
 
     def diff_snapshots(self, from_snapshot: int, to_snapshot: int) -> dict:
         """Incremental changefeed (CDC export) between two committed
@@ -1437,14 +1426,8 @@ class CrawlEngine:
             raise ValueError(
                 "from_snapshot %d > to_snapshot %d" % (from_snapshot, to_snapshot)
             )
-        mfs = {}
-        for r in (from_snapshot, to_snapshot):
-            mf = os.path.join(self.config.workdir, "round_%05d" % r, "manifest.json")
-            if not os.path.exists(mf):
-                raise FileNotFoundError("no committed snapshot r%05d" % r)
-            with open(mf) as f:
-                mfs[r] = json.load(f)
-        mf0, mf1 = mfs[from_snapshot], mfs[to_snapshot]
+        mf0 = self._load_manifest(from_snapshot)
+        mf1 = self._load_manifest(to_snapshot)
 
         # seen: append-only log → set difference of delta dirs
         s0, s1 = mf0.get("seen_deltas", []), mf1.get("seen_deltas", [])
@@ -1627,20 +1610,10 @@ class CrawlEngine:
         realistic URL lengths."""
         if self.config.seen_probe_broadcast_max is not None:
             return self.config.seen_probe_broadcast_max
-        raw = str(
-            self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        ).strip().lower()
-        mult = 1
-        for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                          ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                          ("b", 1)):
-            if raw.endswith(suffix):
-                raw, mult = raw[: -len(suffix)], m
-                break
-        try:
-            thr = int(raw) * mult
-        except ValueError:
-            thr = 10 << 20
+        # Spark's own parse of the byte-size string ("64MB", "1g", "-1")
+        thr = (
+            self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        )
         if thr <= 0:  # auto-broadcast disabled ≠ probe disabled: keep the
             thr = 10 << 20  # default byte budget for the explicit hint
         return max(thr // self._PROBE_ROW_BYTES, 1)
@@ -1784,15 +1757,8 @@ class CrawlEngine:
 
     def latest_round(self) -> int | None:
         """Highest committed round in workdir, or None."""
-        if not os.path.isdir(self.config.workdir):
-            return None
-        rounds = [
-            int(d.split("_")[1])
-            for d in os.listdir(self.config.workdir)
-            if d.startswith("round_") and not d.endswith(".tmp")
-            and os.path.exists(os.path.join(self.config.workdir, d, "manifest.json"))
-        ]
-        return max(rounds) if rounds else None
+        rounds = self._committed_rounds()
+        return rounds[-1] if rounds else None
 
     # -- robots epoch switch -------------------------------------------------
     def rebase_robots(self) -> dict:
@@ -1847,8 +1813,7 @@ class CrawlEngine:
                 "rebase (run the first epoch with run())" % cfg.workdir
             )
         base = os.path.join(cfg.workdir, "round_%05d" % last)
-        with open(os.path.join(base, "manifest.json")) as f:
-            manifest = json.load(f)
+        manifest = self._load_manifest(last)
         if manifest.get("robots") == self.robots_fingerprint():
             return manifest  # same rules — resume directly
         self._check_seen_buckets(manifest, "rebase_robots")
@@ -2009,8 +1974,7 @@ class CrawlEngine:
             last = self.latest_round()
             if last is not None:
                 base = os.path.join(cfg.workdir, "round_%05d" % last)
-                with open(os.path.join(base, "manifest.json")) as f:
-                    manifest = json.load(f)
+                manifest = self._load_manifest(last)
                 self._check_robots_fp(manifest, "resume")
                 self._check_seen_buckets(manifest, "resume")
                 self._check_frontier_stamped(manifest, "resume")
@@ -2100,11 +2064,11 @@ class CrawlEngine:
             # deferred + newly-scheduled (+ staged), all already counted
             if n_frontier == 0:
                 break
-            if cfg.cache_frontier:
-                frontier = frontier.persist()
+            phase_s: dict[str, float] = {}
+            tick = self._make_tick(phase_s)
             (frontier_adds, frontier_dels, seen_delta, host_state_n, errors_df,
              extracted, transcript_df, c, transcript, n_valid) = self._round(
-                r, frontier, seen, host_state
+                r, frontier, seen, host_state, tick
             )
             c["staged"] = n_staged
 
@@ -2119,7 +2083,6 @@ class CrawlEngine:
                 ),
                 "transcript": transcript_df,
             }
-            tick = self._make_tick(r)
             base = os.path.join(cfg.workdir, "round_%05d" % r)
             tmp = base + ".tmp"
             if os.path.exists(tmp):
@@ -2160,6 +2123,7 @@ class CrawlEngine:
                 "adds": self._frontier_log["adds"] + [add_rel],
                 "dels": self._frontier_log["dels"] + [del_rel],
             }
+            tick("write_frontier_deltas")
             frontier_compacted_away: list[str] = []
             if len(frontier_log_next["adds"]) >= max(cfg.frontier_compact_every, 1):
                 merged = self._read_frontier(frontier_log_next, r)
@@ -2175,7 +2139,6 @@ class CrawlEngine:
                 # dropped — the compacted base holds none of them.
                 frontier_log_next = {"base": new_base, "adds": [], "dels": []}
                 tick("compact_frontier")
-            tick("write_frontier_deltas")
             # host_state delta: ≤ this batch's hosts rows, appended to the
             # merge-on-read log — the full per-host table is never
             # rewritten (the old design rewrote all |hosts| rows every
@@ -2260,6 +2223,10 @@ class CrawlEngine:
                 "snapshot_id": "r%05d" % r,
                 "parent_snapshot": ("r%05d" % (r - 1)) if r > start_round or resume else None,
                 "counters": c,
+                # wall seconds per named phase of this round (the `tick`
+                # labels, in execution order) — kept out of `counters`,
+                # which must stay deterministic across runs
+                "phase_s": phase_s,
                 "seen_deltas": seen_rels_next,
                 "frontier_log": frontier_log_next,
                 "host_state_deltas": host_state_rels_next,
@@ -2300,8 +2267,6 @@ class CrawlEngine:
                     shutil.rmtree(p)
 
             # re-open state from the COMMITTED logs/paths (.tmp is gone)
-            if cfg.cache_frontier:
-                frontier.unpersist()
             frontier = self._read_frontier(self._frontier_log, r)
             n_frontier = c["deferred_by_politeness"] + c["scheduled"]
             seen = self._read_seen(self._seen_rels)

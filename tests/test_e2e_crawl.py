@@ -240,6 +240,17 @@ def test_snapshot_manifest_lineage_and_time_travel(crawl_pair, spark):
     # chain: every non-first snapshot names its parent
     for prev, cur in zip(snaps, snaps[1:]):
         assert cur["parent_snapshot"] == prev["snapshot_id"]
+    # per-phase walls: every round records the same named phases (this
+    # crawl has politeness on and no compaction), in execution order
+    phases = [
+        "counts_agg", "batch_select", "fetch_join", "extract", "links_canon",
+        "dedup_antijoin", "write_errors", "write_extracted",
+        "write_transcript", "write_seen_delta", "write_frontier_deltas",
+        "write_host_state_delta",
+    ]
+    for s in snaps:
+        assert list(s["phase_s"]) == phases, s["round"]
+        assert all(v >= 0.0 for v in s["phase_s"].values())
     # time travel: seen-set is monotone across the last two snapshots
     if len(snaps) >= 2 and result.rounds >= 2:
         r = result.rounds - 1
@@ -831,6 +842,34 @@ def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
     plan2 = unpruned._jdf.queryExecution().executedPlan().toString()
     assert not any(sb_pruned(ln) for ln in plan2.splitlines())  # full scan
     assert "Exchange hashpartitioning(url_canon" not in plan2  # no seen shuffle
+
+
+def test_seen_probe_cap_follows_broadcast_threshold(spark, tiny_fixture, tmp_path):
+    """The derived probe-row cap is Spark's own parse of
+    autoBroadcastJoinThreshold over ~96 B/row; "-1" (auto-broadcast off)
+    keeps the 10 MB budget, and an explicit seen_probe_broadcast_max
+    wins over either."""
+    pages = spark.read.parquet(tiny_fixture["pages"])
+
+    def cap(**kw):
+        eng = CrawlEngine(
+            spark, pages, _registry(),
+            config=EngineConfig(workdir=str(tmp_path), **kw),
+        )
+        return eng._seen_probe_max()
+
+    row_bytes = CrawlEngine._PROBE_ROW_BYTES
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "64MB")
+        assert cap() == (64 << 20) // row_bytes
+        assert cap(seen_probe_broadcast_max=123) == 123
+        spark.conf.set(key, "-1")
+        assert cap() == (10 << 20) // row_bytes
+        assert cap(seen_probe_broadcast_max=123) == 123
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_seen_probe_scans_prebucketing_deltas(spark, tiny_fixture, tmp_path_factory):

@@ -82,6 +82,28 @@ def test_oracle_parity_and_determinism(spark):
     )
     assert got == again
 
+    # a diameter-1 star (every leaf points at the hub) saturates at
+    # t=1: Spark stops at t=2 (registers unchanged), the oracle unrolls
+    # to t=3 — Spark's rows are a prefix, the tail repeats N(2)
+    star = [(i, 0) for i in range(1, 21)]
+    got = [
+        tuple(r)
+        for r in neighborhood_function(
+            spark.createDataFrame(star, "src long, dst long"), max_t=3
+        ).orderBy("t").collect()
+    ]
+    con.register("e1", pd.DataFrame(star, columns=["src", "dst"]))
+    want = sorted(
+        tuple(r)
+        for r in con.execute(
+            neighborhood_function_oracle_sql("SELECT src, dst FROM e1", 3)
+        ).fetchall()
+    )
+    assert [t for t, _ in got] == [0, 1, 2]
+    assert [t for t, _ in want] == [0, 1, 2, 3]
+    assert got == want[: len(got)]
+    assert all(n == got[-1][1] for _, n in want[len(got):])
+
 
 def test_saturation_stop_and_diameter(spark):
     """A 10-node directed cycle saturates at t=9; the EXACT

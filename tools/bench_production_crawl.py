@@ -3,8 +3,8 @@ WHOLE (round-3 judge: "the configuration DEPLOY.md recommends has never
 been measured as a whole"): bucketed pages fetch + Bloom seen pre-filter
 + bucketed seen log with compaction + hot-host routing + politeness
 (bucketed robots_dim, host_state delta log) over a 2M+-page corpus,
-8 rounds, with per-phase walls (EngineConfig.timing) and the round-3
-box-drift protocol (same-hour CPU control before AND after the run).
+8 rounds, with per-phase walls (each round manifest's `phase_s`) and the
+round-3 box-drift protocol (same-hour CPU control before AND after the run).
 
 Pages are generated IN SPARK (deterministic, distributed — a 2M-page
 ~8 KB-body corpus is ~16 GB; a driver-side pandas loop would not
@@ -18,14 +18,11 @@ lives under /private (robots-denied path).
 
 from __future__ import annotations
 
-import io
 import json
 import os
-import re
 import shutil
 import sys
 import time
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -148,7 +145,6 @@ def main() -> None:
             batch_cap=BATCH_CAP,
             workdir=wd,
             collect_transcript=False,
-            timing=True,
             use_bloom=True,
             pages_buckets=PAGES_BUCKETS,
             hot_host_threshold=100_000,
@@ -166,20 +162,19 @@ def main() -> None:
     )
     seeds = [{"url": r.url, "callbacks": ["page"]} for r in seed_rows]
 
-    buf = io.StringIO()
     t0 = time.time()
-    with redirect_stdout(buf):
-        res = eng.run(seeds, max_rounds=N_ROUNDS)
+    res = eng.run(seeds, max_rounds=N_ROUNDS)
     wall = round(time.time() - t0, 2)
     control_after = cpu_control()
 
-    # fold the engine's tick lines into per-round and per-phase walls
+    # fold each round manifest's phase walls into per-round and
+    # per-phase totals
     per_round: dict[int, float] = {}
     per_phase: dict[str, float] = {}
-    for m in re.finditer(r"\[r(\d+)\] (\S+)\s+([0-9.]+)s", buf.getvalue()):
-        r, phase, s = int(m.group(1)), m.group(2), float(m.group(3))
-        per_round[r] = round(per_round.get(r, 0.0) + s, 2)
-        per_phase[phase] = round(per_phase.get(phase, 0.0) + s, 2)
+    for m in eng.snapshots():
+        per_round[m["round"]] = round(sum(m["phase_s"].values()), 2)
+        for phase, s in m["phase_s"].items():
+            per_phase[phase] = round(per_phase.get(phase, 0.0) + s, 2)
 
     fetched = res.total_fetched
     out = {
