@@ -115,7 +115,7 @@ def flagship_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
         config=EngineConfig(
             batch_cap=64,
             workdir=tempfile.mkdtemp(prefix="crawl_flagship_"),
-            keep_rounds=1, collect_transcript=True),
+            collect_transcript=True),
     )
     seeds = [
         {"url": "http://host%d.example/p/%d" % (i % 20, i), "callbacks": ["page"]}

@@ -29,143 +29,21 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_QUERIES = [
-    "fifo_batch",
-    "politeness_rank",
-    "seen_antijoin",
-    "fetch_join",
-    "round_counters",
-    "priority_topk",
-    "seq_stamp",
-    "url_canonicalize",
-    "request_construct",
-    "dedup_exact",
-    "clean_corpus",
-    "minhash_pairs",
-    "ngram_jaccard",
-    "simhash",
-    "lang_id",
-    "quality_score",
-    "token_count",
-    "vocabulary",
-    "fingerprint",
-    "cosine_topk",
-    "ivf_topk",
-    "embed_neardup",
-    # round-3 operators
-    "block_dedup",
-    "tfidf",
-    "pii_scrub",
-    "gopher_repetition",
-    "line_dedup",
-    "hash_sample",
-    "domain_quota",
-    "signbit_neardup",
-    "pack_sequences",
-    "shuffle_order",
-    "bpe_merges",
-    "zlib_ratio",
-    "token_entropy",
-    "pagerank",
-    "connected_components",
-    # round-4 operators
-    "cc_star",
-    "repeated_spans",
-    "pq_topk",
-    # round-5 operators
-    "semdedup",
-    "dsir_score",
-    "cdc_dedup",
-    "lm_score",
-    "hits",
-    "host_graph",
-    "decontaminate_bloom",
-    "shard_stats",
-    "nb_classify",
-    "nfc_dedup",
-    "lm_buckets",
-    # round-5 continuation: C4 stage family + mojibake repair + Gopher
-    # quality + boilerplate removal + URL normalization
-    "c4_clean",
-    "span_dedup",
-    "fix_encoding",
-    "gopher_quality",
-    "main_content",
-    "url_strip",
-    # round-5 continuation: frontier-hygiene + curation gates
-    "trap_detect",
-    "domain_reputation",
-    "ccnet_dedup",
-    "incremental_dedup",
-    "leak_split",
-    "mirror_hosts",
-    # round-5 continuation: planning/reporting compositions
-    "datasheet",
-    "epoch_mix",
-    "canonical_dedup",
-    "pr_priority",
-    "meta_robots",
-    "host_budget",
-    "postings",
-    # round-5 continuation: retrieval + crawl-coverage analytics
-    "bm25",
-    "hop_distance",
-    "degree_stats",
-    "content_drift",
-    "sitemap_gap",
-    "sessionize",
-    "error_streaks",
-    "asset_filter",
-    "redirects",
-    "ann_recall",
-    "embed_dim_stats",
-    "lsh_recall",
-    # round-5 continuation: WET sink (the WARC/WET round-trip's write half)
-    "wet_export",
-    # round-5 continuation: WAT sink (link/head metadata records — the
-    # third Common Crawl artifact; JSON assembled JVM-side)
-    "wat_export",
-    "wat_links",
-    # round-5 continuation: URL-structure mining (dedup/strip rule discovery)
-    "url_templates",
-    "param_stats",
-    # round-5 continuation: link-spam demotion + gate calibration
-    "trustrank",
-    "score_quantiles",
-    # round-5 continuation: CDX/CDXJ URL index (the fourth Common Crawl
-    # artifact family — SURT keys + sorted queryable index)
-    "cdx_index",
-    "cdx_lookup",
-    "cdx_collapse",
-    "cdx_revisit",
-    # round-5 continuation: mergeable KLL quantile sketch (the 100 TB
-    # arm of gate calibration; exact-regime oracle, bounded elsewhere)
-    "kll_quantiles",
-    # round-5 continuation: mergeable HyperLogLog registers (the
-    # cross-round distinct-count arm; register table ≤ |strata|·4096
-    # rows, raw keys never rescanned)
-    "hll_distinct",
-    # round-5 continuation: πps sampling without replacement
-    # (sequential Poisson; bit-exact selection, bounded top-k)
-    "weighted_sample",
-    # round-5 continuation: adaptive politeness controller (telemetry
-    # window -> next-epoch per-host delay/concurrency)
-    "host_policy",
-    # round-5 continuation: RFC 9309 wildcard robots matching
-    # (longest-match precedence, broadcast rule arrays, no URL shuffle)
-    "robots_wildcard",
-    # round-5 continuation: Misra-Gries frequent-items summary (the
-    # frequency arm of the sketch family; keys never shuffle raw)
-    "mg_hosts",
-    # round-5 continuation: HyperBall neighborhood function (per-node
-    # HLL balls pushed along edges — all JVM partial aggregates)
-    "neighborhood_fn",
-    # round-5 continuation: harmonic centrality from the same sketches
-    "harmonic",
-    # round-5 continuation: KMV/theta set-operation sketch (campaign
-    # overlap — the intersection HLL cannot answer)
-    "theta_overlap",
-]
+import __spark_entry__ as entry  # noqa: E402
+
+# every contract query is benched except these: the queries() dict is the
+# one list of names, so a new query is benched unless it is named here
+_NOT_BENCHED = frozenset({
+    "glob_route", "deadline_expire", "host_skew", "pq_encode", "ivf_pq",
+    "minhash_bands", "neardup_clusters", "domain_mix", "contamination",
+    "sitemap", "recrawl", "anchor_topk", "latest_capture", "metrics_rollup",
+    "decontaminate", "url_filter", "ivf_assign", "ivf_train", "curate",
+    "signbit_buckets", "multimodal_meta", "image_hashes", "audio_features",
+    "image_neardup", "video_demux",
+    # the crawl is timed by run_crawl below, not as a query
+    "crawl_flagship",
+})
+BENCH_QUERIES = [n for n in entry.queries() if n not in _NOT_BENCHED]
 
 PAGES_PER_SF = 2_000_000  # sf0.1 -> 200k pages
 FIXTURE_FILES = 32  # parquet files -> scan parallelism (a real corpus has many)
@@ -228,7 +106,6 @@ def run_crawl(spark, pages_dir: str, n_pages: int, rounds: int = 3) -> dict:
             batch_cap=max(1000, n_pages // 4),
             workdir=wd,
             collect_transcript=False,
-            keep_rounds=1,
         ),
     )
     seed_urls = [
@@ -260,7 +137,6 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_of(sf_dir)
 
-    import __spark_entry__ as entry
     from crawl_spark.session import make_session
 
     spark = make_session("bench", master=f"local[{cpus}]")

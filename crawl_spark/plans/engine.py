@@ -13,13 +13,15 @@ DataFrame dataflow:
       extract  = one-parse mapInPandas: per-handler text + links
       new      = explode links -> canonicalize -> in-round dedup
                  -> anti-join seen
-      frontier log += (adds=new, dels=batch urls);  seen log += new;
-      host clock advances
+      frontier log += (adds=new, dels=this round's transcript);
+      seen log += new;  host clock advances
       -> snapshot (parquet per round under workdir; lineage truncation;
          seen is an APPEND-ONLY delta log and the frontier is a
          MERGE-ON-READ log — base ∪ adds − dels, with expired and
          robots-denied rows dropped by predicate at read; full frontier
          materialization happens only at compaction rounds)
+      -> one atomic manifest rename commits the round, then `_reap`
+         deletes every log dir the committed manifest does not reference
 
 Scale design notes (100 TB pages, 10^10-row frontier):
 - The fetch join broadcasts the BATCH side (bounded by batch_cap) against
@@ -165,15 +167,6 @@ class EngineConfig:
     # ``CrawlResult.read_transcript(spark)`` to reconstruct the list, or
     # opt in here for tests/small crawls.
     collect_transcript: bool = False
-    # retention depth for REDUNDANT per-round artifacts. Since round 4
-    # every state table (seen/frontier/host_state) lives in a shared
-    # append-only delta log pruned only by its own compaction, so the
-    # only per-round file that duplicates recoverable state is the
-    # Bloom snapshot (bloom.npz, ~8 MB × rounds with use_bloom): rounds
-    # older than this lose theirs (a resume from such a round rebuilds
-    # the bitmaps from the seen log). errors/extracted/transcript are
-    # the crawl's O(batch) OUTPUTS, not caches — never reaped.
-    keep_rounds: int = 2
     default_crawl_delay: float = 0.0
     # accepted and ignored: every batch is selected by ranked_topk. The
     # benchmark harness (frontierbench/measure.py) is the last caller
@@ -236,10 +229,11 @@ class EngineConfig:
     # "all of them". Probes at or below this threshold (staged trickles,
     # small batches, resume replays) still prune — where it matters.
     seen_prune_max_probe: int = 2_048
-    # frontier merge-on-read log: rounds append add/del deltas; once the
-    # log holds this many add deltas the commit materializes the merged
-    # frontier as a new base (amortizes the O(|frontier|) write to 1/k
-    # rounds). 1 = materialize every round (legacy behavior).
+    # frontier merge-on-read log: rounds append an add delta (their
+    # transcript is the del entry); once the log holds this many add
+    # deltas the commit materializes the merged frontier as a new base
+    # (amortizes the O(|frontier|) write to 1/k rounds). 1 = materialize
+    # every round (legacy behavior).
     frontier_compact_every: int = 8
     # out-of-band seed pickup: when set, every round boundary drains the
     # streaming staging dir (streaming/feed.py) and unions not-yet-seen
@@ -610,10 +604,10 @@ class CrawlEngine:
             # north_rule calls out. Mitigation with EXACT semantics:
             # detect heavy hitters from the per-host aggregate above,
             # route each hot host through a distributed per-host top-k
-            # (its budget is a pure function of (robots, host_state, r),
-            # computed driver-side from the same formula), and keep the
-            # single-shuffle window for the cold tail. The union equals
-            # the plain window rank because FIFO keys are unique.
+            # whose per-row budget is the same `budget` column the window
+            # filters on, and keep the single-shuffle window for the cold
+            # tail. The union equals the plain window rank because FIFO
+            # keys are unique.
             hot_hosts: list[str] = []
             if cfg.hot_host_threshold:
                 hot_hosts = [
@@ -640,13 +634,10 @@ class CrawlEngine:
             budget = F.when(d <= 0, F.lit(None).cast("long")).otherwise(
                 F.greatest(F.ceil((F.lit(r + 1.0) - s_t) / d), F.lit(0))
             )
+            active_hs = F.broadcast(self._active_host_state(host_state, r))
             w = Window.partitionBy("host").orderBy(*FIFO_KEY)
             ranked = (
-                cold.join(
-                    F.broadcast(self._active_host_state(host_state, r)),
-                    "host",
-                    "left",
-                )
+                cold.join(active_hs, "host", "left")
                 .withColumn("host_budget", budget)
                 .withColumn("host_rank", F.row_number().over(w))
             )
@@ -655,61 +646,26 @@ class CrawlEngine:
             ).select(*_FRONTIER_COLS)
 
             if hot_hosts:
-                import math
-
-                # ONE driver job for all hot-host budget inputs (instead
-                # of a collect + a Spark job per host): budgets are a
-                # pure function of (robots delay, host clock, r)
-                hot_df = self.spark.createDataFrame(
-                    [(h,) for h in hot_hosts], "host string"
+                # ONE distributed grouped top-k over ALL hot hosts: every
+                # row carries its stamped crawl_delay, so the budget is
+                # the window's column (unlimited = batch_cap, the global
+                # cap bounds it).
+                # grouped_topk's contract: the input must recompute
+                # DETERMINISTICALLY (its monotonic-id rank is evaluated on
+                # both sides of a self-aggregate-join). Holds here:
+                # `allowed` derives from parquet scans of the committed
+                # frontier log through deterministic filters/joins, and
+                # FIFO keys are unique (seq stamping).
+                cap = F.lit(cfg.batch_cap).cast("long")
+                hot = (
+                    allowed.filter(F.col("host").isin(hot_hosts))
+                    .join(active_hs, "host", "left")
+                    .withColumn("__k", F.least(F.coalesce(budget, cap), cap))
                 )
-                rsrc, _ = self._robots_scan()
-                # ≤ max_hot_hosts values: the isin pushes into the
-                # robots scan (row-group skip on the host-sorted files)
-                # so the build side is a handful of rows, never the
-                # whole dimension — same no-full-robots-join rule as
-                # the stamp probe
-                hot_delays = rsrc.filter(
-                    F.col("host").isin(hot_hosts)
-                ).select("host", "crawl_delay")
-                info = {
-                    row.host: (row.crawl_delay, row.next_time)
-                    for row in hot_df.join(hot_delays, "host", "left").join(
-                        self._active_host_state(host_state, r), "host", "left"
-                    ).collect()
-                }
-                budgets = []
-                for h in hot_hosts:
-                    dh, nth = info[h]
-                    dh = cfg.default_crawl_delay if dh is None else dh
-                    if dh <= 0:
-                        k_h = cfg.batch_cap  # unlimited budget; global cap bounds it
-                    else:
-                        s_h = max(nth if nth is not None else 0.0, float(r))
-                        k_h = max(int(math.ceil((r + 1.0 - s_h) / dh)), 0)
-                    k_h = min(k_h, cfg.batch_cap)
-                    if k_h > 0:
-                        budgets.append((h, k_h))
-                if budgets:
-                    # ONE distributed grouped top-k over ALL hot hosts —
-                    # per-host budgets ride a broadcast column; no
-                    # per-host driver loop, no per-host jobs
-                    budgets_df = self.spark.createDataFrame(
-                        budgets, "host string, __k long"
-                    )
-                    hot = allowed.select(*_FRONTIER_COLS).join(
-                        F.broadcast(budgets_df), "host"
-                    )
-                    # grouped_topk's contract: the input must recompute
-                    # DETERMINISTICALLY (its monotonic-id rank is evaluated
-                    # on both sides of a self-aggregate-join). Holds here:
-                    # `allowed` derives from parquet scans of the committed
-                    # frontier log through deterministic filters/joins, and
-                    # FIFO keys are unique (seq stamping).
-                    hot_top = grouped_topk(hot, ["host"], FIFO_KEY, "__k").select(
-                        *_FRONTIER_COLS
-                    )
-                    survivors = survivors.unionByName(hot_top)
+                hot_top = grouped_topk(hot, ["host"], FIFO_KEY, "__k").select(
+                    *_FRONTIER_COLS
+                )
+                survivors = survivors.unionByName(hot_top)
         else:
             # no politeness: counts still come from ONE aggregation job
             agg = frontier.agg(
@@ -953,16 +909,18 @@ class CrawlEngine:
 
         # MERGE-ON-READ frontier semantics: the round emits only DELTAS —
         # adds = this round's new links (bounded by the batch's link
-        # fan-out) and dels = the dequeued batch's urls (bounded by
-        # batch_cap). Deferred rows are never rewritten: they simply stay
-        # in the log and re-rank next round. Expired and robots-denied
-        # rows need no delete lists at all — deadlines and robots are
-        # static, so `_read_frontier` drops them by predicate. Exactness
-        # of url-list deletes rests on the seen-set invariant: a url that
-        # ever entered the frontier is in `seen`, so it can never be
-        # re-added — dels and adds never collide.
+        # fan-out); the dels are the dequeued batch's urls, which the
+        # round's `transcript` table below already holds (bounded by
+        # batch_cap) — the manifest lists that table as the del entry,
+        # so the urls are written once. Deferred rows are never
+        # rewritten: they simply stay in the log and re-rank next round.
+        # Expired and robots-denied rows need no delete lists at all —
+        # deadlines and robots are static, so `_read_frontier` drops them
+        # by predicate. Exactness of url-list deletes rests on the
+        # seen-set invariant: a url that ever entered the frontier is in
+        # `seen`, so it can never be re-added — dels and adds never
+        # collide.
         frontier_adds = new_rows
-        frontier_dels = batch.select("url_canon")
         # APPEND-ONLY seen semantics: the round emits only the DELTA (this
         # round's newly-seen urls). The caller appends it to the delta log;
         # the full seen set is the union of delta files — never rewritten.
@@ -981,8 +939,9 @@ class CrawlEngine:
         # the durable transcript record (url_canon, batch_pos) — the
         # driver-side `transcript` list is an optional test convenience,
         # the parquet table is the O(batch_cap)-per-round source of truth
+        # (and the frontier log's del entry for this round)
         transcript_df = batch.select("url_canon", "batch_pos")
-        return (frontier_adds, frontier_dels, seen_delta, host_state_delta,
+        return (frontier_adds, seen_delta, host_state_delta,
                 errors_df, extracted, transcript_df, c, transcript, n_valid)
 
     @staticmethod
@@ -1316,6 +1275,39 @@ class CrawlEngine:
             if d.startswith("round_") and not d.endswith(".tmp")
             and os.path.exists(os.path.join(self.config.workdir, d, "manifest.json"))
         )
+
+    # the workdir dirs holding the state logs; everything under them is
+    # owned by the latest committed manifest (see _reap)
+    _LOG_ROOTS = ("seen_deltas", "frontier_log", "host_state_log")
+
+    def _reap(self, manifest: dict) -> None:
+        """The one deletion rule: once ``manifest`` is committed, delete
+        every dir under the state logs it does not reference — deltas a
+        compaction or a rebase replaced, and the orphans a crash leaves
+        between a delta write and its commit or between a commit and this
+        cleanup. Round dirs (whose transcripts are the frontier's del
+        entries) and ``robots_dim/`` are never touched. Older manifests
+        lose time-travel over reaped dirs: the documented retention
+        contract."""
+        log = manifest["frontier_log"]
+        keep = {
+            os.path.normpath(p)
+            for p in [
+                *manifest["seen_deltas"], log["base"], *log["adds"], *log["dels"],
+                *manifest.get("host_state_deltas", []),
+            ]
+        }
+        for root in self._LOG_ROOTS:
+            d = os.path.join(self.config.workdir, root)
+            for name in os.listdir(d) if os.path.isdir(d) else []:
+                if os.path.join(root, name) not in keep:
+                    shutil.rmtree(os.path.join(d, name))
+
+    @staticmethod
+    def _parquet_files(path: str) -> list[str]:
+        """The parquet files of one written dir (a snapshot's file-level
+        lineage)."""
+        return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
 
     def snapshots(self) -> list[dict]:
         """All committed snapshot manifests, oldest first."""
@@ -1694,7 +1686,11 @@ class CrawlEngine:
     # -- frontier merge-on-read log ----------------------------------------
     # The frontier is an Iceberg-v2-style log: a materialized `base` plus
     # per-round `adds` (new links) and `dels` (dequeued batch urls). A
-    # read unions base+adds, anti-joins the broadcast del set, and drops
+    # round's del entry is its own `round_NNNNN/transcript` table, read
+    # through its url_canon column; workdirs from before that list
+    # `frontier_log/del_NNNNN` dirs of url_canon alone, which read the
+    # same way. A read unions base+adds, anti-joins the broadcast del
+    # set, and drops
     # expired / robots-denied rows BY PREDICATE — deadlines and robots
     # rules are static per row/engine, so those (potentially unbounded)
     # delete sets never need materializing:
@@ -1838,11 +1834,6 @@ class CrawlEngine:
         new_base = self._write_delta(
             restamped, "base_rebase_%05d" % k, log="frontier_log"
         )
-        old_refs = [
-            manifest["frontier_log"]["base"],
-            *manifest["frontier_log"]["adds"],
-            *manifest["frontier_log"]["dels"],
-        ]
         manifest = {
             **manifest,
             "frontier_log": {
@@ -1859,14 +1850,9 @@ class CrawlEngine:
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.rename(tmp, os.path.join(base, "manifest.json"))  # atomic commit
-        # the committed manifest references only the restamped base —
-        # drop the old epoch's log dirs (older manifests lose
-        # time-travel: the same documented retention as compaction).
-        # A crash before this cleanup leaves overwritable orphans.
-        for rel in old_refs:
-            p = os.path.join(cfg.workdir, rel)
-            if os.path.exists(p):
-                shutil.rmtree(p)
+        # the committed manifest references only the restamped base:
+        # the old epoch's base and adds go (its dels are transcripts)
+        self._reap(manifest)
         return manifest
 
     # -- out-of-band staged-seed pickup ------------------------------------
@@ -2066,7 +2052,7 @@ class CrawlEngine:
                 break
             phase_s: dict[str, float] = {}
             tick = self._make_tick(phase_s)
-            (frontier_adds, frontier_dels, seen_delta, host_state_n, errors_df,
+            (frontier_adds, seen_delta, host_state_n, errors_df,
              extracted, transcript_df, c, transcript, n_valid) = self._round(
                 r, frontier, seen, host_state, tick
             )
@@ -2093,46 +2079,39 @@ class CrawlEngine:
                 path = os.path.join(tmp, name)
                 df.write.mode("overwrite").parquet(path)
                 # file-level lineage: the output files this snapshot owns
-                lineage[name] = sorted(
-                    f for f in os.listdir(path) if f.endswith(".parquet")
-                )
+                lineage[name] = self._parquet_files(path)
                 tick("write_" + name)
             # append this round's seen DELTA to the log (atomic rename; a
             # crash before manifest commit leaves an unreferenced dir,
-            # which the round replay overwrites — Iceberg orphan-file
-            # semantics)
+            # which the round replay overwrites or the next commit's
+            # _reap deletes — Iceberg orphan-file semantics)
             delta_rel = self._write_delta(seen_delta, "delta_%05d" % r)
-            lineage["seen"] = sorted(
-                f
-                for f in os.listdir(os.path.join(cfg.workdir, delta_rel))
-                if f.endswith(".parquet")
-            )
+            lineage["seen"] = self._parquet_files(os.path.join(cfg.workdir, delta_rel))
             tick("write_seen_delta")
-            # frontier log: append this round's add/del deltas (bounded by
-            # the batch's links and batch_cap respectively); materialize a
-            # new base only every `frontier_compact_every` rounds
+            # frontier log: append this round's add delta (bounded by the
+            # batch's links); the del entry is the transcript written
+            # above. Materialize a new base only every
+            # `frontier_compact_every` rounds
             add_rel = self._write_delta(frontier_adds, "add_%05d" % r, log="frontier_log")
-            del_rel = self._write_delta(frontier_dels, "del_%05d" % r, log="frontier_log")
-            lineage["frontier"] = sorted(
-                f
-                for f in os.listdir(os.path.join(cfg.workdir, add_rel))
-                if f.endswith(".parquet")
-            )
+            lineage["frontier"] = self._parquet_files(os.path.join(cfg.workdir, add_rel))
             frontier_log_next = {
                 **self._frontier_log,  # keeps a rebase's restamped_at
                 "adds": self._frontier_log["adds"] + [add_rel],
-                "dels": self._frontier_log["dels"] + [del_rel],
+                "dels": self._frontier_log["dels"] + ["round_%05d/transcript" % r],
             }
             tick("write_frontier_deltas")
-            frontier_compacted_away: list[str] = []
             if len(frontier_log_next["adds"]) >= max(cfg.frontier_compact_every, 1):
-                merged = self._read_frontier(frontier_log_next, r)
+                # the round dir is not renamed yet: read this round's
+                # transcript from its .tmp path
+                merged = self._read_frontier(
+                    {
+                        **frontier_log_next,
+                        "dels": self._frontier_log["dels"]
+                        + ["round_%05d.tmp/transcript" % r],
+                    },
+                    r,
+                )
                 new_base = self._write_delta(merged, "base_%05d" % r, log="frontier_log")
-                frontier_compacted_away = [
-                    frontier_log_next["base"],
-                    *frontier_log_next["adds"],
-                    *frontier_log_next["dels"],
-                ]
                 # restamped_at is intentionally dropped: the merge above
                 # ran at upto_r = r ≥ the rebase round, so every
                 # re-stamped denial has been processed and predicate-
@@ -2146,15 +2125,12 @@ class CrawlEngine:
             # Skipped entirely when politeness is inactive (the delta is
             # the empty identity).
             host_state_rels_next = self._host_state_rels
-            hs_compacted_away: list[str] = []
             if self._politeness_active:
                 hs_rel = self._write_delta(
                     host_state_n, "hs_%05d" % r, log="host_state_log"
                 )
-                lineage["host_state"] = sorted(
-                    f
-                    for f in os.listdir(os.path.join(cfg.workdir, hs_rel))
-                    if f.endswith(".parquet")
+                lineage["host_state"] = self._parquet_files(
+                    os.path.join(cfg.workdir, hs_rel)
                 )
                 host_state_rels_next = host_state_rels_next + [hs_rel]
                 tick("write_host_state_delta")
@@ -2170,11 +2146,9 @@ class CrawlEngine:
                         "hs_compact_%05d" % r,
                         log="host_state_log",
                     )
-                    hs_compacted_away = host_state_rels_next
                     host_state_rels_next = [hs_compact]
                     tick("compact_host_state")
             seen_rels_next = self._seen_rels + [delta_rel]
-            compacted_away: list[str] = []
             if (
                 cfg.seen_compact_min_deltas
                 and len(seen_rels_next) >= cfg.seen_compact_min_deltas
@@ -2182,7 +2156,6 @@ class CrawlEngine:
                 compact_rel = self._write_seen_delta(
                     self._read_seen(seen_rels_next), "compact_%05d" % r
                 )
-                compacted_away = seen_rels_next
                 seen_rels_next = [compact_rel]
                 tick("compact_seen")
             # per-partition metrics of the round's fetch output
@@ -2258,29 +2231,17 @@ class CrawlEngine:
             self._seen_rels = seen_rels_next
             self._frontier_log = frontier_log_next
             self._host_state_rels = host_state_rels_next
-            # only NOW is it safe to drop compacted deltas: the committed
-            # manifest references the compact dirs, not them (older
-            # manifests lose time-travel — documented retention)
-            for rel in compacted_away + frontier_compacted_away + hs_compacted_away:
-                p = os.path.join(cfg.workdir, rel)
-                if os.path.exists(p):
-                    shutil.rmtree(p)
+            # only NOW is it safe to drop what the committed manifest no
+            # longer references; the Bloom snapshot is superseded too (a
+            # resume loads the latest round's)
+            self._reap(manifest)
+            prev_npz = os.path.join(cfg.workdir, "round_%05d" % (r - 1), "bloom.npz")
+            if os.path.exists(prev_npz):
+                os.remove(prev_npz)
 
             # re-open state from the COMMITTED logs/paths (.tmp is gone)
             frontier = self._read_frontier(self._frontier_log, r)
             n_frontier = c["deferred_by_politeness"] + c["scheduled"]
             seen = self._read_seen(self._seen_rels)
             host_state = self._read_host_state_deltas(self._host_state_rels)
-            # retention: state tables live in shared delta logs (pruned
-            # only by their own compaction) and round dirs hold O(batch)
-            # OUTPUTS — the one redundant per-round artifact is the
-            # Bloom snapshot (each fully supersedes the previous; a
-            # resume from an older round rebuilds from the seen log)
-            if self._bloom is not None and cfg.keep_rounds:
-                for d in sorted(os.listdir(cfg.workdir)):
-                    if d.startswith("round_") and not d.endswith(".tmp"):
-                        rr = int(d.split("_")[1])
-                        npz = os.path.join(cfg.workdir, d, "bloom.npz")
-                        if rr <= r - cfg.keep_rounds and os.path.exists(npz):
-                            os.remove(npz)
         return res

@@ -73,31 +73,36 @@ def test_build_and_split_spark(spark):
     assert (~out_seen["possibly_seen"]).mean() > 0.5
 
 
-def test_engine_bloom_path_equals_exact_path(spark, tiny_fixture, tmp_path_factory):
-    """The full crawl with use_bloom=True must produce the identical
-    transcript/counters as the exact path (bloom is only a pre-filter)."""
+def _bloom_engine(spark, tiny_fixture, workdir, use_bloom):
     from crawl_spark.plans.engine import CrawlEngine, EngineConfig
-    from tests.test_e2e_crawl import _load, _registry
+    from tests.test_e2e_crawl import _registry
 
-    pages, seeds, robots = _load(tiny_fixture)
+    return CrawlEngine(
+        spark,
+        spark.read.parquet(tiny_fixture["pages"]),
+        _registry(),
+        robots_df=spark.read.parquet(tiny_fixture["robots"]),
+        config=EngineConfig(
+            batch_cap=40,
+            max_rounds=4,
+            workdir=workdir,
+            use_bloom=use_bloom,
+            bloom_buckets=8,
+            bloom_bits=1 << 14, collect_transcript=True),
+    )
 
-    def run(use_bloom: bool):
-        eng = CrawlEngine(
-            spark,
-            spark.read.parquet(tiny_fixture["pages"]),
-            _registry(),
-            robots_df=spark.read.parquet(tiny_fixture["robots"]),
-            config=EngineConfig(
-                batch_cap=40,
-                max_rounds=4,
-                workdir=str(tmp_path_factory.mktemp(f"bloom_{use_bloom}")),
-                use_bloom=use_bloom,
-                bloom_buckets=8,
-                bloom_bits=1 << 14, collect_transcript=True),
-        )
-        return eng.run(seeds)
 
-    exact, bloom = run(False), run(True)
+@pytest.fixture(scope="module")
+def exact_crawl(spark, tiny_fixture, tmp_path_factory):
+    """The exact-path (no Bloom) 4-round crawl both engine tests compare to."""
+    from tests.test_e2e_crawl import _load
+
+    _, seeds, _ = _load(tiny_fixture)
+    wd = str(tmp_path_factory.mktemp("bloom_False"))
+    return _bloom_engine(spark, tiny_fixture, wd, False).run(seeds)
+
+
+def _assert_same_crawl(bloom, exact):
     assert bloom.transcript == exact.transcript
     assert [c["scheduled"] for c in bloom.counters] == [
         c["scheduled"] for c in exact.counters
@@ -105,3 +110,44 @@ def test_engine_bloom_path_equals_exact_path(spark, tiny_fixture, tmp_path_facto
     assert [c["deduped"] for c in bloom.counters] == [
         c["deduped"] for c in exact.counters
     ]
+
+
+def test_engine_bloom_path_equals_exact_path(
+    spark, tiny_fixture, tmp_path_factory, exact_crawl
+):
+    """The full crawl with use_bloom=True must produce the identical
+    transcript/counters as the exact path (bloom is only a pre-filter)."""
+    from tests.test_e2e_crawl import _load
+
+    _, seeds, _ = _load(tiny_fixture)
+    wd = str(tmp_path_factory.mktemp("bloom_True"))
+    bloom = _bloom_engine(spark, tiny_fixture, wd, True).run(seeds)
+    _assert_same_crawl(bloom, exact_crawl)
+
+
+def test_bloom_resume_loads_latest_snapshot(
+    spark, tiny_fixture, tmp_path_factory, exact_crawl
+):
+    """Each commit supersedes the previous round's bloom.npz, so only the
+    newest round dir holds one; a resume loads it and crawls on exactly
+    like the exact path."""
+    import os
+
+    from tests.test_e2e_crawl import _load
+
+    _, seeds, _ = _load(tiny_fixture)
+    wd = str(tmp_path_factory.mktemp("bloom_resume"))
+
+    def npz_rounds():
+        return [
+            d for d in sorted(os.listdir(wd))
+            if os.path.exists(os.path.join(wd, d, "bloom.npz"))
+        ]
+
+    _bloom_engine(spark, tiny_fixture, wd, True).run(seeds, max_rounds=3)
+    assert npz_rounds() == ["round_00002"]
+    resumed = _bloom_engine(spark, tiny_fixture, wd, True).run(
+        seeds, max_rounds=4, resume=True
+    )
+    assert npz_rounds() == ["round_00003"]
+    _assert_same_crawl(resumed, exact_crawl)

@@ -48,6 +48,31 @@ def _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=6):
     )
 
 
+_LOG_ROOTS = ("seen_deltas", "frontier_log", "host_state_log")
+
+
+def _assert_reaped(engine):
+    """The one deletion rule after the last commit: the dirs under the
+    three state-log roots are exactly the latest manifest's references,
+    and every committed round's transcript (a frontier del entry) is
+    still on disk."""
+    import os
+
+    wd = engine.config.workdir
+    snaps = engine.snapshots()
+    m, log = snaps[-1], snaps[-1]["frontier_log"]
+    refs = {*m["seen_deltas"], log["base"], *log["adds"], *log["dels"],
+            *m["host_state_deltas"]}
+    on_disk = {
+        os.path.join(root, d)
+        for root in _LOG_ROOTS
+        for d in os.listdir(os.path.join(wd, root))
+    }
+    assert on_disk == {p for p in refs if p.split("/")[0] in _LOG_ROOTS}
+    for s in snaps:
+        assert os.path.isdir(os.path.join(wd, "round_%05d" % s["round"], "transcript"))
+
+
 @pytest.fixture(scope="module")
 def crawl_pair(spark, tiny_fixture, tmp_path_factory):
     pages, seeds, robots = _load(tiny_fixture)
@@ -185,7 +210,7 @@ def test_resume_identical_ordering(spark, tiny_fixture, tmp_path_factory):
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
-        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd, keep_rounds=99, collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd, collect_transcript=True),
     )
     mk().run(seeds, max_rounds=2)  # "killed" after round 2
     result = mk().run(seeds, max_rounds=5, resume=True)
@@ -339,7 +364,7 @@ def test_seen_compaction_and_resume(spark, tiny_fixture, tmp_path_factory):
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
-            batch_cap=40, max_rounds=5, workdir=wd, keep_rounds=99,
+            batch_cap=40, max_rounds=5, workdir=wd,
             seen_compact_min_deltas=2, collect_transcript=True),
     )
     mk().run(seeds, max_rounds=2)
@@ -351,13 +376,14 @@ def test_seen_compaction_and_resume(spark, tiny_fixture, tmp_path_factory):
     # the log stays bounded: compaction keeps ≤ min_deltas dirs around
     droot = os.path.join(wd, "seen_deltas")
     assert len(os.listdir(droot)) <= 2
+    _assert_reaped(engine)
 
 
 def test_frontier_log_bounded_writes(crawl_pair, spark):
     """The frontier is a merge-on-read log: per-round writes are the add
-    delta (this round's new links) and del delta (the dequeued batch) —
-    bounded by batch outputs, never O(|frontier|) — and read_table
-    reconstructs the exact frontier."""
+    delta (this round's new links), and the del entry is the round's
+    transcript (the dequeued batch) — bounded by batch outputs, never
+    O(|frontier|) — and read_table reconstructs the exact frontier."""
     import os
 
     golden, result, engine = crawl_pair
@@ -365,17 +391,23 @@ def test_frontier_log_bounded_writes(crawl_pair, spark):
     names = sorted(os.listdir(droot))
     # no full materialization happened (default compact_every=8 > rounds)
     assert not any(n.startswith("base_0") for n in names)
+    # the dequeued urls are written once, as the transcript
+    assert not any(n.startswith("del_") for n in names)
+    snaps = engine.snapshots()
     for c in result.counters:
         r = c["round"]
         n_add = spark.read.parquet(os.path.join(droot, "add_%05d" % r)).count()
         assert n_add == c["scheduled"]
-        n_del = spark.read.parquet(os.path.join(droot, "del_%05d" % r)).count()
+        del_rel = snaps[r]["frontier_log"]["dels"][-1]
+        assert del_rel == "round_%05d/transcript" % r
+        n_del = spark.read.parquet(os.path.join(result.workdir, del_rel)).count()
         assert n_del <= 40  # batch_cap
     # merged view at the last snapshot: every url is either unfetched or
     # pending; none of the dequeued urls remain
     frontier = engine.read_table("frontier").toPandas()
     dequeued = {u for roundlist in result.transcript for u in roundlist}
     assert not (set(frontier.url_canon) & dequeued)
+    _assert_reaped(engine)
 
 
 def test_frontier_compaction_and_resume(spark, tiny_fixture, tmp_path_factory):
@@ -393,7 +425,7 @@ def test_frontier_compaction_and_resume(spark, tiny_fixture, tmp_path_factory):
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
-            batch_cap=40, max_rounds=5, workdir=wd, keep_rounds=99,
+            batch_cap=40, max_rounds=5, workdir=wd,
             frontier_compact_every=2, collect_transcript=True),
     )
     mk().run(seeds, max_rounds=3)
@@ -403,7 +435,63 @@ def test_frontier_compaction_and_resume(spark, tiny_fixture, tmp_path_factory):
     # compaction ran and consumed dirs were dropped: the log stays small
     droot = os.path.join(wd, "frontier_log")
     assert any(n.startswith("base_0") for n in os.listdir(droot))
-    assert len(os.listdir(droot)) <= 5  # base + ≤2 adds + ≤2 dels
+    assert len(os.listdir(droot)) <= 3  # base + ≤2 adds (dels are transcripts)
+    _assert_reaped(engine)
+
+
+def test_resume_legacy_del_dirs_through_compaction(spark, tiny_fixture, tmp_path_factory):
+    """Workdirs written before the transcript became the del entry list
+    ``frontier_log/del_NNNNN`` dirs (url_canon only) as their dels. Such
+    a log resumes exactly — the reaper keeps the legacy dirs while the
+    manifest references them — and the first frontier compaction drops
+    them, never a transcript."""
+    import json
+    import os
+
+    pages, seeds, robots = _load(tiny_fixture)
+    golden = _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=5)
+    wd = str(tmp_path_factory.mktemp("legacy_del_work"))
+    mk = lambda: CrawlEngine(  # noqa: E731
+        spark,
+        spark.read.parquet(tiny_fixture["pages"]),
+        _registry(),
+        robots_df=spark.read.parquet(tiny_fixture["robots"]),
+        config=EngineConfig(
+            batch_cap=40, max_rounds=5, workdir=wd,
+            frontier_compact_every=4, collect_transcript=True),
+    )
+    mk().run(seeds, max_rounds=2)  # rounds 0-1, no compaction
+    legacy = ["frontier_log/del_%05d" % r for r in range(2)]
+    for r, rel in enumerate(legacy):
+        spark.read.parquet(os.path.join(wd, "round_%05d" % r, "transcript")).select(
+            "url_canon"
+        ).write.parquet(os.path.join(wd, rel))
+        mpath = os.path.join(wd, "round_%05d" % r, "manifest.json")
+        with open(mpath) as f:
+            m = json.load(f)
+        assert m["frontier_log"]["dels"] == [
+            "round_%05d/transcript" % rr for rr in range(r + 1)
+        ]
+        m["frontier_log"]["dels"] = legacy[: r + 1]
+        with open(mpath, "w") as f:
+            json.dump(m, f)
+
+    engine = mk()
+    engine.run(seeds, max_rounds=3, resume=True)  # round 2: 3 adds, no compaction
+    assert engine.snapshots()[-1]["frontier_log"]["dels"] == legacy + [
+        "round_00002/transcript"
+    ]
+    assert all(os.path.isdir(os.path.join(wd, rel)) for rel in legacy)
+    _assert_reaped(engine)
+
+    engine = mk()
+    result = engine.run(seeds, max_rounds=5, resume=True)  # round 3 compacts
+    assert result.transcript == golden.transcript
+    seen = {row.url_canon for row in engine.read_table("seen").collect()}
+    assert seen == golden.seen
+    assert engine.snapshots()[3]["frontier_log"]["base"] == "frontier_log/base_00003"
+    assert not any(os.path.isdir(os.path.join(wd, rel)) for rel in legacy)
+    _assert_reaped(engine)
 
 
 def test_resume_rejects_changed_seen_buckets(spark, tiny_fixture, tmp_path_factory):
@@ -474,6 +562,7 @@ def test_engine_matches_refmodel_across_configs(
     keys = ["fetched", "deduped", "deferred_by_politeness", "expired"]
     for got, exp in zip(result.counters, golden.counters):
         assert {k: got[k] for k in keys} == {k: exp[k] for k in keys}
+    _assert_reaped(engine)
 
 
 def test_crash_between_delta_write_and_commit_replays_cleanly(
@@ -495,7 +584,7 @@ def test_crash_between_delta_write_and_commit_replays_cleanly(
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
-        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd, keep_rounds=99, collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd, collect_transcript=True),
     )
     mk().run(seeds, max_rounds=3)  # rounds 0..2 committed
     # simulate the crash window during round 2: delete the committed
@@ -508,6 +597,7 @@ def test_crash_between_delta_write_and_commit_replays_cleanly(
     assert result.transcript == golden.transcript
     seen = {row.url_canon for row in engine.read_table("seen").collect()}
     assert seen == golden.seen
+    _assert_reaped(engine)
 
 
 def test_resume_across_hive_layout_seen_deltas(spark, tiny_fixture, tmp_path_factory):
@@ -530,7 +620,7 @@ def test_resume_across_hive_layout_seen_deltas(spark, tiny_fixture, tmp_path_fac
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
-            batch_cap=40, max_rounds=5, workdir=wd, keep_rounds=99,
+            batch_cap=40, max_rounds=5, workdir=wd,
             seen_compact_min_deltas=min_deltas, collect_transcript=True),
     )
     old = mk(0)
@@ -662,7 +752,7 @@ def test_staged_seed_pickup_at_round_boundary(spark, tiny_fixture, tmp_path_fact
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         config=EngineConfig(batch_cap=40, max_rounds=2, workdir=wd,
-                            keep_rounds=99, staged_seeds_dir=staging, collect_transcript=True),
+                            staged_seeds_dir=staging, collect_transcript=True),
     )
     res = mk().run([])  # NO direct seeds: frontier starts empty
     assert res.counters[0]["staged"] == 2
@@ -1242,7 +1332,7 @@ def test_rebase_robots_epoch_switch(spark, tiny_fixture, tmp_path_factory):
         _registry(),
         robots_df=rb,
         config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,
-                            keep_rounds=99, collect_transcript=True),
+                            collect_transcript=True),
     )
     mk(robots1_df).run(seeds, max_rounds=2)  # epoch 1: rounds 0-1
 
@@ -1255,6 +1345,7 @@ def test_rebase_robots_epoch_switch(spark, tiny_fixture, tmp_path_factory):
     assert m["frontier_log"]["restamped_at"] == 2
     assert m["rebase"]["at_round"] == 2
     assert m["n_frontier"] >= 0
+    _assert_reaped(eng2)  # the old epoch's base and adds are gone
     # idempotent: same-rules rebase is a no-op returning the manifest
     assert mk(robots2_df).rebase_robots()["rebase"] == m["rebase"]
 
@@ -1283,6 +1374,7 @@ def test_rebase_robots_epoch_switch(spark, tiny_fixture, tmp_path_factory):
     assert any(r >= 2 for (_, r) in exp_denied), "switch must deny live rows"
     seen = {row.url_canon for row in eng2.read_table("seen").collect()}
     assert seen == golden.seen
+    _assert_reaped(eng2)
 
 
 def test_rebase_robots_to_empty_rules(spark, tiny_fixture, tmp_path_factory):
@@ -1307,7 +1399,7 @@ def test_rebase_robots_to_empty_rules(spark, tiny_fixture, tmp_path_factory):
     )
     wd = str(tmp_path_factory.mktemp("rebase_empty_work"))
     cfg = lambda: EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,  # noqa: E731
-                               keep_rounds=99, collect_transcript=True)
+                               collect_transcript=True)
     CrawlEngine(
         spark, spark.read.parquet(tiny_fixture["pages"]), _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]), config=cfg(),

@@ -54,7 +54,6 @@ def one_run(use_bloom: bool) -> None:
             batch_cap=N_PAGES // 6,
             workdir=workdir,
             collect_transcript=False,
-            keep_rounds=1,
             use_bloom=use_bloom,
             bloom_buckets=64,
             bloom_bits=1 << 22,

@@ -86,7 +86,6 @@ def one_run(cpus: int, master: str | None = None) -> None:
             batch_cap=N_PAGES // 2,
             workdir=workdir,
             collect_transcript=False,
-            keep_rounds=1,
         ),
     )
     seeds = [

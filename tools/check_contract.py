@@ -1,7 +1,10 @@
 """Local stand-in for the driver's correctness gate: run every
 ``__spark_entry__.queries()`` entry on Spark and its ``oracle_sql()``
-twin on DuckDB at sf0.01, then compare row count, column names, and
-order-insensitive values.  Usage:
+twin on DuckDB at sf0.01, then compare row count, column names,
+order-insensitive values, and integral column types: a column Spark's
+schema declares integral must not come back from DuckDB as a float,
+DECIMAL or HUGEINT (the value comparison coerces dtypes, so a widened
+oracle would otherwise still match).  Usage:
 
     python tools/check_contract.py [--sf /root/testdata/sf0.01] [names...]
 """
@@ -9,12 +12,14 @@ order-insensitive values.  Usage:
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 import time
 
 import duckdb
 import numpy as np
 import pandas as pd
+from pyspark.sql.types import IntegralType
 
 sys.path.insert(0, ".")
 
@@ -31,6 +36,21 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
         elif np.issubdtype(df[c].dtype, np.floating):
             df[c] = df[c].astype("float64")
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def dtype_problems(schema, duck_cols: list[str], duck_types: list) -> list[str]:
+    """Columns Spark's schema types as integral whose DuckDB twin is a
+    float, DECIMAL or HUGEINT. Read from the Spark schema, not the
+    pandas dtype: ``toPandas`` turns a nullable int column holding nulls
+    into float64."""
+    duck = dict(zip(duck_cols, (str(t) for t in duck_types)))
+    return [
+        f"dtype {f.name}: spark={f.dataType.simpleString()} duck={duck[f.name]}"
+        for f in schema.fields
+        if isinstance(f.dataType, IntegralType)
+        and f.name in duck
+        and re.match(r"(FLOAT|DOUBLE|DECIMAL|U?HUGEINT)", duck[f.name])
+    ]
 
 
 def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str]:
@@ -89,7 +109,8 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, args.sf).toPandas()
+            sq = qs[name](spark, args.sf)
+            sdf = sq.toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:400]}")
             failed.append(name)
@@ -98,12 +119,14 @@ def main() -> int:
             print(f"ok   {name}: rows={len(sdf)} (no oracle, rows-only) [{time.time()-t0:.1f}s]")
             continue
         try:
-            ddf = con.execute(oracles[name]).fetchdf()
+            rel = con.sql(oracles[name])
+            ddf = rel.df()
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:400]}")
             failed.append(name)
             continue
-        problems = compare(name, sdf, ddf)
+        problems = dtype_problems(sq.schema, rel.columns, rel.types)
+        problems += compare(name, sdf, ddf)
         if problems:
             print(f"FAIL {name}: rows={len(sdf)}: " + "; ".join(problems))
             failed.append(name)

@@ -159,8 +159,9 @@ def main() -> None:
     cap(
         "Merge-on-read frontier reconstruction",
         "The frontier after 3 rounds = base ∪ add-deltas, anti-joined "
-        "against the BROADCAST del-deltas (BroadcastHashJoin LeftAnti — "
-        "dels are bounded by batch_cap), with expired/robots drops as "
+        "against the BROADCAST dels, the rounds' transcripts "
+        "(BroadcastHashJoin LeftAnti — dels are bounded by batch_cap), "
+        "with expired/robots drops as "
         "plain COLUMN predicates (round 4: the robots verdict is "
         "stamped at add time — no robots join in the read at all). "
         "Union + one broadcast join + filters only: NO shuffle, no "
