@@ -60,6 +60,7 @@ from ..functions.canon_udf import canonicalize_udf
 from ..functions.extract import extract_links as _extract_links_py
 from ..functions.htmldom import parse_html, sel_text
 from ..operators.topk import grouped_topk, ranked_topk
+from ..sources.fixtures import PAGES_BUCKET_COL
 from .handlers import HandlerRegistry
 
 SEQ_STRIDE = 1 << 20
@@ -77,7 +78,7 @@ _FRONTIER_COLS = [
     # politeness columns, stamped AT ADD TIME (robots is static per
     # engine run — pinned by the manifest fingerprint): `denied` is the
     # robots-disallow verdict for this row, `crawl_delay` the host's
-    # delay (null = no robots row; the config default applies at use).
+    # delay (null = no robots row: no delay).
     # Stamping when rows enter the frontier (seeds / new links / staged
     # pickups — all bounded per round) means the round loop NEVER joins
     # the frontier against robots: at a 10^8-host robots table the old
@@ -167,7 +168,6 @@ class EngineConfig:
     # ``CrawlResult.read_transcript(spark)`` to reconstruct the list, or
     # opt in here for tests/small crawls.
     collect_transcript: bool = False
-    default_crawl_delay: float = 0.0
     # accepted and ignored: every batch is selected by ranked_topk. The
     # benchmark harness (frontierbench/measure.py) is the last caller
     # that still passes it; not a field, so it is neither stored nor
@@ -175,16 +175,15 @@ class EngineConfig:
     topk_serial_max: InitVar[int | None] = None
     # politeness skew: hosts with at least this many frontier rows are
     # routed through a distributed per-host top-k instead of the
-    # groupBy(host) window (0/None disables detection)
+    # groupBy(host) window (0/None disables detection; at most
+    # CrawlEngine._MAX_HOT_HOSTS hosts per round take that route)
     hot_host_threshold: int | None = 2_000_000
-    max_hot_hosts: int = 16
     # Bloom seen-set pre-filter (operators/bloom.py): OFF by default at
     # test scale (the exact anti-join is cheaper below ~10^7 seen rows);
     # turn on for 10^9+ seen-sets where the anti-join shuffle dominates.
     use_bloom: bool = False
     bloom_buckets: int = 64
     bloom_bits: int = 1 << 20
-    bloom_hashes: int = 4
     # seen-set delta-log compaction: once the log holds at least this
     # many delta dirs, the commit rewrites their union into one compact
     # dir and the manifest references only that (bounds reader file
@@ -204,31 +203,6 @@ class EngineConfig:
     # buckets the round's links actually touch, and the Bloom bitmaps
     # share the same idea per host bucket.
     seen_buckets: int = 64
-    # membership-check strategy threshold: when the round's candidate
-    # links are at most this many rows, the check runs as
-    #   hits  = seen ⋉ broadcast(links)      (seen SCANNED, never shuffled)
-    #   unseen = links ⋉̸ broadcast(hits)     (both joins build the bounded side)
-    # — per-round cost is one pruned scan of seen, flat in rounds, vs the
-    # classic anti-join that re-shuffles the ENTIRE seen set every round
-    # (O(|seen|) network at a 10^10-row seen set). Candidate sets larger
-    # than this (bounded by batch_cap × links/page — tune together) fall
-    # back to the shuffle anti-join, which AQE can still skew-split.
-    # MEMORY COST: the probe path broadcasts the (url_hash, url_canon)
-    # candidate set AND (separately) the ≤-as-large hit set — i.e. up to
-    # 2× ~(96 B/row × max) live on the driver and every executor per
-    # round. None (default) derives the cap from
-    # spark.sql.autoBroadcastJoinThreshold / ~96 B-per-row (Spark's
-    # 10 MB default ⇒ ~109k rows ⇒ tens of MB as a hashed relation —
-    # safe on default-sized JVMs); set an explicit row count only with
-    # the executor/driver headroom to match (4M rows ≈ 400 MB × 2).
-    seen_probe_broadcast_max: int | None = None
-    # bucket-prune the seen scan only when the probe side is small enough
-    # for pruning to have a chance: ≥ ~B·ln(B) uniformly-hashed links
-    # touch every bucket w.h.p. (coupon collector), so collecting their
-    # distinct buckets is a wasted per-round job that always answers
-    # "all of them". Probes at or below this threshold (staged trickles,
-    # small batches, resume replays) still prune — where it matters.
-    seen_prune_max_probe: int = 2_048
     # frontier merge-on-read log: rounds append an add delta (their
     # transcript is the del entry); once the log holds this many add
     # deltas the commit materializes the merged frontier as a new base
@@ -241,8 +215,8 @@ class EngineConfig:
     # up at the next round boundary" semantics (SURVEY §3.3)
     staged_seeds_dir: str | None = None
     # bucketed pages layout (SURVEY §4.2, fetch side): when set, pages_df
-    # must carry a hive-partition column `pages_bucket_col` with value
-    # pmod(F.hash(url), pages_buckets) (sources.fixtures.
+    # must carry a hive-partition column PAGES_BUCKET_COL ("pb") with
+    # value pmod(F.hash(url), pages_buckets) (sources.fixtures.
     # write_bucketed_pages writes this layout). Each round collects the
     # batch's ≤batch_cap distinct bucket ids (tiny job over the
     # checkpointed batch) and filters the pages scan on them BEFORE the
@@ -250,24 +224,17 @@ class EngineConfig:
     # so the two per-round pages scans read O(batch buckets / B) of the
     # 100 TB table instead of all of it. None disables (flat layout).
     pages_buckets: int | None = None
-    pages_bucket_col: str = "pb"
-    # robots dimension layout: when set (and politeness is active), the
-    # engine persists the robots table ONCE per workdir under
-    # `robots_dim/`, hive-partitioned by rb = pmod(hash(host), B) with
-    # files host-sorted within each bucket — the same layout the seen
-    # log uses. The per-round stamp probe (new links' hosts, bounded)
-    # then prunes its robots scan to the touched buckets instead of
-    # scanning (or worse, broadcasting) all 10^8 hosts. None = probe the
-    # in-memory robots DataFrame without partition pruning.
-    robots_buckets: int | None = 64
-    # small-dim stamp fast path (round 5): a robots table with at most
-    # this many rows is broadcast outright by `_stamp_robots` — one
-    # join, no per-batch host-probe driver job, and no persisted
-    # robots_dim either (the pruned scan would never be used). None
-    # derives the cap from autoBroadcastJoinThreshold exactly like the
-    # seen probe (`_seen_probe_max`); 0 forces the pruned-scan probe
-    # path regardless of size (used by plan-evidence tooling).
-    robots_broadcast_max: int | None = None
+    # robots dimension layout (positive int): a robots table above the
+    # broadcast row cap (CrawlEngine._seen_probe_max — the one
+    # autoBroadcastJoinThreshold byte budget the seen probe also uses)
+    # is persisted ONCE per workdir under `robots_dim/`, hive-partitioned
+    # by rb = pmod(hash(host), B) with files host-sorted within each
+    # bucket — the same layout the compacted seen log uses. The stamp
+    # probe (new links' hosts, bounded) then prunes its robots scan to
+    # the touched buckets instead of scanning (or worse, broadcasting)
+    # all 10^8 hosts. At or below the cap the whole table broadcasts at
+    # stamp time and no robots_dim is written.
+    robots_buckets: int = 64
     # host_state is a merge-on-read delta log (host_state_log/): each
     # round appends only the batch's host-clock updates (≤ batch hosts
     # rows); the state is the per-host MAX over the deltas (valid
@@ -277,6 +244,10 @@ class EngineConfig:
     # one dir (same amortization contract as seen_compact_min_deltas).
     # 0 disables compaction.
     host_state_compact_min_deltas: int = 32
+
+    def __post_init__(self, topk_serial_max):
+        if not isinstance(self.robots_buckets, int) or self.robots_buckets < 1:
+            raise ValueError("robots_buckets must be a positive int")
 
 
 @dataclass
@@ -392,7 +363,7 @@ class CrawlEngine:
         # (+ the bucket partition column when the layout is bucketed)
         page_cols = [F.col("url").alias("page_url"), F.col("html").alias("html")]
         if self.config.pages_buckets:
-            page_cols.append(F.col(self.config.pages_bucket_col))
+            page_cols.append(F.col(PAGES_BUCKET_COL))
         self.pages = pages_df.select(*page_cols)
         if robots_df is None:
             robots_df = spark.createDataFrame(
@@ -416,13 +387,12 @@ class CrawlEngine:
                 "(deduplicate/merge rules upstream — "
                 "functions.robots.robots_table emits one row per host)"
             )
-        # politeness fast path: with no robots rules and no default delay,
-        # every budget is unlimited and no URL is denied — the per-host
-        # window rank, robots join and host-clock update are identity
-        # transforms, so skip them (saves a shuffle + 2 joins per round).
-        self._politeness_active = (
-            self.config.default_crawl_delay > 0 or n_rb > 0  # no isEmpty job
-        )
+        # politeness fast path: with no robots rules every budget is
+        # unlimited (absent crawl_delay -> 0.0) and no URL is denied — the
+        # per-host window rank, robots join and host-clock update are
+        # identity transforms, so skip them (saves a shuffle + 2 joins
+        # per round).
+        self._politeness_active = n_rb > 0  # no isEmpty job
         self._n_robots = n_rb
         self._robots_dim_path: str | None = None  # set by _ensure_robots_dim
         self._robots_small: DataFrame | None = None  # small-dim stamp cache
@@ -434,9 +404,7 @@ class CrawlEngine:
         if self.config.use_bloom:
             from ..operators.bloom import BloomConfig
 
-            self._bloom_cfg = BloomConfig(
-                self.config.bloom_buckets, self.config.bloom_bits, self.config.bloom_hashes
-            )
+            self._bloom_cfg = BloomConfig(self.config.bloom_buckets, self.config.bloom_bits)
         else:
             self._bloom_cfg = None
 
@@ -579,10 +547,12 @@ class CrawlEngine:
                 )
                 .localCheckpoint(eager=True)
             )
+            host_allowed = F.col("__n") - F.col("__n_exp") - F.col("__n_den")
             tot = per_host.agg(
                 F.sum("__n").alias("n"),
                 F.sum("__n_exp").alias("n_expired"),
                 F.sum("__n_den").alias("n_denied"),
+                F.max(host_allowed).alias("max_host_allowed"),
             ).collect()[0]
             c["expired"] = int(tot.n_expired or 0)
             n_allowed = int((tot.n or 0) - (tot.n_expired or 0) - (tot.n_denied or 0))
@@ -602,23 +572,22 @@ class CrawlEngine:
             # `host`, so a mega-host (hot domain) lands its ENTIRE
             # frontier slice in one task — the classic skew the
             # north_rule calls out. Mitigation with EXACT semantics:
-            # detect heavy hitters from the per-host aggregate above,
-            # route each hot host through a distributed per-host top-k
-            # whose per-row budget is the same `budget` column the window
-            # filters on, and keep the single-shuffle window for the cold
-            # tail. The union equals the plain window rank because FIFO
-            # keys are unique.
+            # detect heavy hitters from the per-host aggregate above (the
+            # collect job runs only when the totals' per-host max says a
+            # host is hot), route each hot host through a distributed
+            # per-host top-k whose per-row budget is the same `budget`
+            # column the window filters on, and keep the single-shuffle
+            # window for the cold tail. The union equals the plain window
+            # rank because FIFO keys are unique.
             hot_hosts: list[str] = []
-            if cfg.hot_host_threshold:
+            thr = cfg.hot_host_threshold
+            if thr and (tot.max_host_allowed or 0) >= thr:
                 hot_hosts = [
                     row.host
-                    for row in per_host.select(
-                        "host",
-                        (F.col("__n") - F.col("__n_exp") - F.col("__n_den")).alias("n"),
-                    )
-                    .filter(F.col("n") >= cfg.hot_host_threshold)
+                    for row in per_host.select("host", host_allowed.alias("n"))
+                    .filter(F.col("n") >= thr)
                     .orderBy(F.col("n").desc())
-                    .limit(cfg.max_hot_hosts)
+                    .limit(self._MAX_HOT_HOSTS)
                     .collect()
                 ]
             cold = allowed.filter(~F.col("host").isin(hot_hosts)) if hot_hosts else allowed
@@ -628,7 +597,7 @@ class CrawlEngine:
             # next_time > r) — for nt ≤ r, greatest(nt, r) = r, identical
             # to the host being absent, so the broadcast is bounded by
             # hosts still on cooldown, never all hosts ever fetched.
-            d = F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_crawl_delay))
+            d = F.coalesce(F.col("crawl_delay"), F.lit(0.0))
             nt = F.coalesce(F.col("next_time"), F.lit(0.0))
             s_t = F.greatest(nt, F.lit(float(r)))
             budget = F.when(d <= 0, F.lit(None).cast("long")).otherwise(
@@ -721,7 +690,7 @@ class CrawlEngine:
                     "host",
                     "left",
                 )
-                .withColumn("d", F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_crawl_delay)))
+                .withColumn("d", F.coalesce(F.col("crawl_delay"), F.lit(0.0)))
                 .filter(F.col("d") > 0)
                 .select(
                     "host",
@@ -782,7 +751,7 @@ class CrawlEngine:
                 .collect()
             ]
             pages_src = self.pages.filter(
-                F.col(cfg.pages_bucket_col).isin(bucket_ids)
+                F.col(PAGES_BUCKET_COL).isin(bucket_ids)
             )
         hit_urls = pages_src.select("page_url").join(
             F.broadcast(fetch_batch.select(F.col("url_canon"))),
@@ -978,10 +947,12 @@ class CrawlEngine:
                     F.lit(0),
                 ).alias("fp"),
             ).collect()[0]
+            # the key is kept so manifests written before the config
+            # default went away compare equal (absent delay is always 0.0)
             self._robots_fp = {
                 "n": int(row.n),
                 "fp": int(row.fp),
-                "default_crawl_delay": self.config.default_crawl_delay,
+                "default_crawl_delay": 0.0,
             }
         return self._robots_fp
 
@@ -1042,7 +1013,7 @@ class CrawlEngine:
             "%s: this workdir's frontier log predates add-time robots "
             "stamping (no 'frontier_stamped' manifest pin) and politeness "
             "is active — resuming would treat every queued row as "
-            "robots-allowed with the default crawl delay. Re-crawl into a "
+            "robots-allowed with no crawl delay. Re-crawl into a "
             "fresh workdir (or resume with politeness disabled if that "
             "matches the original run's config)." % what
         )
@@ -1063,11 +1034,9 @@ class CrawlEngine:
         manifest fingerprint already rejects resumes under different
         rules), rewritten otherwise (the dir is a cache of the
         constructor-provided robots_df, not state)."""
-        B = self.config.robots_buckets
-        if not B or not self._politeness_active or self._n_robots == 0:
-            return
-        if self._n_robots <= self._robots_bc_max():
+        if self._n_robots <= self._seen_probe_max():
             return  # small-dim stamp broadcasts outright — no dim needed
+        B = self.config.robots_buckets
         final = os.path.join(self.config.workdir, "robots_dim")
         meta_p = os.path.join(final, "_meta.json")
         want = {"buckets": B, "fp": self.robots_fingerprint()}
@@ -1096,50 +1065,50 @@ class CrawlEngine:
         os.rename(tmp, final)
         self._robots_dim_path = final
 
-    def _robots_scan(self) -> tuple[DataFrame, bool]:
-        """(robots source, bucketed?) — the persisted bucketed scan when
-        available, else the constructor-provided DataFrame."""
-        if self._robots_dim_path:
-            return (
-                self.spark.read.option("basePath", self._robots_dim_path)
-                .schema(self._ROBOTS_DIM_SCHEMA + ", rb int")
-                .parquet(self._robots_dim_path),
-                True,
-            )
-        return self.robots, False
+    def _robots_scan(self) -> DataFrame:
+        """Scan of the persisted rb-bucketed robots_dim (written here on
+        first use when the engine was not started through ``run``)."""
+        if self._robots_dim_path is None:
+            self._ensure_robots_dim()
+        return (
+            self.spark.read.option("basePath", self._robots_dim_path)
+            .schema(self._ROBOTS_DIM_SCHEMA + ", rb int")
+            .parquet(self._robots_dim_path)
+        )
 
     def _stamp_robots(
         self, df: DataFrame, n_probe: int, hosts_src: DataFrame | None = None
     ) -> DataFrame:
         """Stamp (crawl_delay, denied) onto rows ENTERING the frontier.
 
-        ``df`` is bounded (one batch's link fan-out / a seed list / a
-        staged drain), so the join runs as the same scan-side probe the
-        seen membership check uses: prune the robots scan to the hosts'
-        rb buckets, left-semi it against the broadcast host set (robots
-        is only SCANNED — never shuffled, never fully broadcast), and
-        broadcast the ≤|hosts| surviving slice back onto the rows.
-        Probes above the broadcast row cap fall back to a shuffle join
-        (AQE applies). With politeness inactive the stamp is two
-        literals — no jobs.
+        One row cap, ``_seen_probe_max()`` (autoBroadcastJoinThreshold /
+        ~96 B per row — the byte budget the seen probe also uses),
+        picks the strategy:
 
-        Round 5: (a) a robots table small enough to broadcast outright
-        (≤ the same row cap the seen probe derives from
-        autoBroadcastJoinThreshold) skips the host probe entirely — one
-        broadcast join, ZERO driver jobs per stamp; this removes the
-        fixed ~1 s/round probe floor BENCH §e6 measured below ~10^6
-        hosts while keeping the flat pruned-scan asymptotics above it.
-        (b) ``hosts_src``, when given, must be a MATERIALIZED frame
-        whose distinct hosts are a superset of df's — the strategy
-        probe collects from it instead of re-evaluating df's
-        un-checkpointed plan (the links path hands the checkpointed
-        pre-anti-join frame, so the seen anti-join is not run twice
-        per round)."""
-        if not self._politeness_active or self._n_robots == 0:
+        - a robots table at or below the cap broadcasts outright: one
+          broadcast join, ZERO driver jobs per stamp (removes the fixed
+          ~1 s/round probe floor BENCH §e6 measured below ~10^6 hosts);
+        - above it, ``df`` is bounded (one batch's link fan-out / a seed
+          list / a staged drain), so the join runs as the same
+          scan-side probe the seen membership check uses against the
+          persisted rb-bucketed robots_dim (robots is only SCANNED —
+          never shuffled, never fully broadcast): up to
+          ``_PRUNE_MAX_PROBE`` distinct hosts become rb + host IN-lists
+          on the scan; more hosts left-semi the scan against the
+          broadcast host set; a host set above the cap itself falls back
+          to a shuffle join (AQE applies). The ≤|hosts| slice broadcasts
+          back onto the rows.
+
+        With politeness inactive the stamp is two literals — no jobs.
+        ``hosts_src``, when given, must be a MATERIALIZED frame whose
+        distinct hosts are a superset of df's — the strategy probe
+        collects from it instead of re-evaluating df's un-checkpointed
+        plan (the links path hands the checkpointed pre-anti-join frame,
+        so the seen anti-join is not run twice per round)."""
+        if not self._politeness_active:
             return df.withColumn(
                 "crawl_delay", F.lit(None).cast("double")
             ).withColumn("denied", F.lit(False))
-        rsrc, bucketed = self._robots_scan()
         denied = F.coalesce(
             F.exists(
                 F.coalesce(F.col("disallow"), F.array().cast("array<string>")),
@@ -1147,15 +1116,14 @@ class CrawlEngine:
             ),
             F.lit(False),
         )
-        if self._n_robots <= self._robots_bc_max():
+        if self._n_robots <= self._seen_probe_max():
             if self._robots_small is None:
                 # materialized once, broadcast from cached blocks every
                 # later stamp (no per-round scan/footer re-read)
-                self._robots_small = rsrc.select(
-                    "host", "disallow", "crawl_delay"
-                ).localCheckpoint(eager=False)
+                self._robots_small = self.robots.localCheckpoint(eager=False)
             joined = df.join(F.broadcast(self._robots_small), "host", "left")
             return joined.withColumn("denied", denied).drop("disallow")
+        rsrc = self._robots_scan()
         # strategy selection is by DISTINCT HOSTS, not link rows: the
         # broadcast side is always the ≤|hosts| robots slice (never the
         # links), so a 10^6-link fan-out over a few hundred hosts still
@@ -1163,14 +1131,12 @@ class CrawlEngine:
         # needlessly fall back to a full robots shuffle join exactly in
         # the production case (large batches, few hosts).
         hosts = (hosts_src if hosts_src is not None else df).select("host").distinct()
-        cap = self.config.seen_prune_max_probe
+        cap = self._PRUNE_MAX_PROBE
+        B = self.config.robots_buckets
         # ONE bounded job fetches (host, rb) pairs — limit cap+1 so an
         # over-cap host set is detected without a count job
         pairs = hosts.select(
-            "host",
-            F.pmod(F.hash("host"), F.lit(self.config.robots_buckets or 1))
-            .cast("int")
-            .alias("rb"),
+            "host", F.pmod(F.hash("host"), F.lit(B)).cast("int").alias("rb"),
         ).limit(cap + 1).collect()
         if not pairs:
             return df.withColumn(
@@ -1182,10 +1148,9 @@ class CrawlEngine:
             # host isin skips row groups via the host-sorted files'
             # min/max stats. The robots scan cost is then ~flat in
             # |robots| (O(touched row groups), not O(table)).
-            if bucketed:
-                touched = sorted({p.rb for p in pairs})
-                if len(touched) < self.config.robots_buckets:
-                    rsrc = rsrc.filter(F.col("rb").isin(touched))
+            touched = sorted({p.rb for p in pairs})
+            if len(touched) < B:
+                rsrc = rsrc.filter(F.col("rb").isin(touched))
             rslice = rsrc.filter(
                 F.col("host").isin([p.host for p in pairs])
             ).select("host", "disallow", "crawl_delay")
@@ -1197,8 +1162,7 @@ class CrawlEngine:
             # against the broadcast host set and broadcast the slice
             # back. Past that, one bounded count decides; only a host
             # set too big to broadcast falls to the shuffle join
-            # (against the persisted scan — the constructor DataFrame
-            # may be an arbitrary upstream plan; AQE skew-split applies).
+            # (AQE skew-split applies).
             n_hosts = (
                 n_probe if n_probe <= self._seen_probe_max() else hosts.count()
             )
@@ -1578,21 +1542,22 @@ class CrawlEngine:
     # per-row overhead. Used only to DERIVE a row cap from the byte-based
     # broadcast threshold; the probe is broadcast explicitly either way.
     _PROBE_ROW_BYTES = 96
-
-    def _robots_bc_max(self) -> int:
-        """Row cap under which the whole robots table is broadcast by
-        the stamp instead of host-probed (config override, else the
-        same autoBroadcastJoinThreshold-derived cap the seen probe
-        uses)."""
-        if self.config.robots_broadcast_max is not None:
-            return self.config.robots_broadcast_max
-        return self._seen_probe_max()
+    # bucket-prune the seen scan (and IN-list the robots_dim scan) only
+    # when the probe side is small enough for pruning to have a chance:
+    # ≥ ~B·ln(B) uniformly-hashed keys touch every bucket w.h.p. (coupon
+    # collector), so collecting their distinct buckets is a wasted
+    # per-round job that always answers "all of them". Probes at or
+    # below this size (staged trickles, small batches, resume replays)
+    # still prune — where it matters.
+    _PRUNE_MAX_PROBE = 2_048
+    # most hosts per round routed through the hot-host top-k
+    _MAX_HOT_HOSTS = 16
 
     def _seen_probe_max(self) -> int:
-        """Resolved row cap for the scan-probe membership strategy.
+        """Resolved row cap for the scan-probe membership strategy and
+        for the robots stamp's whole-table broadcast — one byte budget.
 
-        Explicit ``config.seen_probe_broadcast_max`` wins. Otherwise the
-        cap is ``autoBroadcastJoinThreshold / ~96 B-per-row`` — the same
+        The cap is ``autoBroadcastJoinThreshold / ~96 B-per-row`` — the same
         byte budget the cluster operator already sized for broadcast
         joins, re-expressed in probe rows (Spark's 10 MB default ⇒
         ~109k rows; a 256 MB memory-rich setting ⇒ ~2.8M). The probe
@@ -1600,8 +1565,6 @@ class CrawlEngine:
         hits), which is why the cap tracks the operator's knob instead
         of a hardcoded row count that could be hundreds of MB at
         realistic URL lengths."""
-        if self.config.seen_probe_broadcast_max is not None:
-            return self.config.seen_probe_broadcast_max
         # Spark's own parse of the byte-size string ("64MB", "1g", "-1")
         thr = (
             self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
@@ -1632,16 +1595,15 @@ class CrawlEngine:
 
         Equality is checked on url_canon (url_hash rides along for the
         cheap 64-bit reject), so this is EXACTLY the anti-join. Above
-        ``seen_probe_broadcast_max`` candidates (by default derived from
-        ``spark.sql.autoBroadcastJoinThreshold`` — see
-        :meth:`_seen_probe_max`) the classic shuffle anti-join takes
-        over (AQE skew-split applies there)."""
+        :meth:`_seen_probe_max` candidates (derived from
+        ``spark.sql.autoBroadcastJoinThreshold``) the classic shuffle
+        anti-join takes over (AQE skew-split applies there)."""
         if n_probe > self._seen_probe_max():
             return links.join(seen.select("url_canon"), "url_canon", "left_anti")
         B = self.config.seen_buckets
         probe = links.select("url_hash", "url_canon")
         pruned = seen
-        if n_probe <= self.config.seen_prune_max_probe:
+        if n_probe <= self._PRUNE_MAX_PROBE:
             # small probe: its distinct buckets are worth a (tiny) job —
             # the scan skips every other bucket's files entirely
             touched = [

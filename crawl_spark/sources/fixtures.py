@@ -311,7 +311,12 @@ def gen_embeddings(n: int, dim: int = 32, seed: int = 42) -> pd.DataFrame:
     )
 
 
-def write_bucketed_pages(pages_df, out_dir: str, buckets: int, col: str = "pb"):
+# hive-partition column of the bucketed pages layout; the engine prunes
+# its pages scan on it when EngineConfig.pages_buckets is set
+PAGES_BUCKET_COL = "pb"
+
+
+def write_bucketed_pages(pages_df, out_dir: str, buckets: int, col: str = PAGES_BUCKET_COL):
     """Write the pages table in the engine's bucketed fetch layout:
     hive-partitioned by ``col = pmod(hash(url), buckets)`` (Spark murmur3,
     the same expression ``EngineConfig.pages_buckets`` prunes on). On a

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -278,7 +279,12 @@ def drain_staged_seeds(
     drained (recorded in each round manifest), so a long-running crawl's
     per-round pickup cost is O(new files), not O(all files ever staged).
     Returns (rows, newly-drained file names); re-draining after a crash
-    before commit is idempotent via the seen-set membership check."""
+    before commit is idempotent via the seen-set membership check.
+
+    A listed file may vanish before it is read (a sink stopped mid-batch
+    deletes its in-flight part files): the read re-lists when Spark
+    reports the path missing, and ``ignoreMissingFiles`` skips a file
+    deleted after the DataFrame was created."""
     if not os.path.isdir(staging_dir):
         return spark.createDataFrame([], STAGED_SCHEMA), []
     new = sorted(
@@ -288,10 +294,16 @@ def drain_staged_seeds(
         and f not in exclude
         and _parquet_complete(os.path.join(staging_dir, f))
     )
-    if not new:
-        return spark.createDataFrame([], STAGED_SCHEMA), []
-    paths = [os.path.join(staging_dir, f) for f in new]
-    return spark.read.schema(STAGED_SCHEMA).parquet(*paths), new
+    reader = spark.read.schema(STAGED_SCHEMA).option("ignoreMissingFiles", "true")
+    while new:
+        try:
+            return reader.parquet(*(os.path.join(staging_dir, f) for f in new)), new
+        except AnalysisException as e:
+            kept = [f for f in new if os.path.exists(os.path.join(staging_dir, f))]
+            if e.getCondition() != "PATH_NOT_FOUND" or kept == new:
+                raise
+            new = kept
+    return spark.createDataFrame([], STAGED_SCHEMA), []
 
 
 def rollup_windows(

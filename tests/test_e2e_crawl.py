@@ -51,6 +51,13 @@ def _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=6):
 _LOG_ROOTS = ("seen_deltas", "frontier_log", "host_state_log")
 
 
+def _zero_broadcast_cap(engine):
+    """Set the engine's one broadcast row cap to 0: the seen check takes
+    the shuffle anti-join and the robots stamp the robots_dim probe."""
+    engine._seen_probe_max = lambda: 0
+    return engine
+
+
 def _assert_reaped(engine):
     """The one deletion rule after the last commit: the dirs under the
     three state-log roots are exactly the latest manifest's references,
@@ -234,9 +241,9 @@ def test_hot_host_path_equals_window_path(spark, tiny_fixture, tmp_path_factory)
             batch_cap=40,
             max_rounds=5,
             workdir=str(tmp_path_factory.mktemp("hot_work")),
-            hot_host_threshold=3,
-            max_hot_hosts=8, collect_transcript=True),
+            hot_host_threshold=3, collect_transcript=True),
     )
+    engine._MAX_HOT_HOSTS = 8
     result = engine.run(seeds)
     assert result.transcript == golden.transcript
     assert [c["deferred_by_politeness"] for c in result.counters] == [
@@ -526,26 +533,33 @@ def test_resume_rejects_changed_seen_buckets(spark, tiny_fixture, tmp_path_facto
     [
         (7, 5, {}),  # tiny batches: many deferrals, deep rounds
         (120, 3, {"seen_compact_min_deltas": 2, "frontier_compact_every": 1}),
-        (40, 4, {"hot_host_threshold": 2, "max_hot_hosts": 4,
+        (40, 4, {"hot_host_threshold": 2, "_MAX_HOT_HOSTS": 4,
                  "frontier_compact_every": 2}),
         # membership-check strategy matrix: force the classic shuffle
-        # anti-join (broadcast-probe disabled) and a single-bucket seen
-        # layout (no pruning possible) — all must be transcript-identical
-        (40, 4, {"seen_probe_broadcast_max": 0}),
+        # anti-join (a zero broadcast row cap, which also sends the
+        # robots stamp to the pruned-scan IN-list probe) and a
+        # single-bucket seen layout (no pruning possible) — all must be
+        # transcript-identical
+        (40, 4, {"_seen_probe_max": lambda: 0}),
         (40, 4, {"seen_buckets": 1}),
-        # politeness-stamp strategy matrix (round 4): no persisted
-        # robots_dim (in-memory probe, no partition pruning) and a
-        # forced shuffle-join stamp — both must be transcript-identical
-        (40, 4, {"robots_buckets": None}),
-        (40, 4, {"seen_probe_broadcast_max": 0, "robots_buckets": None}),
+        # politeness-stamp strategy matrix: past the IN-list size the
+        # stamp semi-joins the robots_dim scan against the broadcast host
+        # set (cap 49: just below the fixture's 50 robots hosts) or, with
+        # a zero cap, takes the shuffle join — both must be
+        # transcript-identical
+        (40, 4, {"_seen_probe_max": lambda: 49, "_PRUNE_MAX_PROBE": 0}),
+        (40, 4, {"_seen_probe_max": lambda: 0, "_PRUNE_MAX_PROBE": 0}),
     ],
 )
 def test_engine_matches_refmodel_across_configs(
     spark, tiny_fixture, tmp_path_factory, cap, rounds, kw
 ):
     """Config matrix: odd batch caps, per-round compaction of BOTH delta
-    logs, and near-universal hot-host routing must all reproduce the
-    sequential reference model exactly."""
+    logs, near-universal hot-host routing and every membership-check and
+    robots-stamp strategy must all reproduce the sequential reference
+    model exactly. ``kw`` keys starting with "_" are set on the engine
+    instance (class constants and the broadcast row cap); the rest are
+    EngineConfig fields."""
     pages, seeds, robots = _load(tiny_fixture)
     golden = _run_refmodel(pages, seeds, robots, batch_cap=cap, max_rounds=rounds)
     engine = CrawlEngine(
@@ -555,8 +569,12 @@ def test_engine_matches_refmodel_across_configs(
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=cap, max_rounds=rounds,
-            workdir=str(tmp_path_factory.mktemp("cfg_work")), **kw, collect_transcript=True),
+            workdir=str(tmp_path_factory.mktemp("cfg_work")), collect_transcript=True,
+            **{k: v for k, v in kw.items() if not k.startswith("_")}),
     )
+    for k, v in kw.items():
+        if k.startswith("_"):
+            setattr(engine, k, v)
     result = engine.run(seeds)
     assert result.transcript == golden.transcript
     keys = ["fetched", "deduped", "deferred_by_politeness", "expired"]
@@ -872,7 +890,7 @@ def test_bucketed_pages_fetch_pruning(spark, tiny_fixture, tmp_path_factory):
 
 
 def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
-    """_links_minus_seen: probes at or below seen_prune_max_probe prune
+    """_links_minus_seen: probes at or below _PRUNE_MAX_PROBE prune
     the seen scan to the touched sb buckets (PartitionFilters on the
     compacted dirs' sb= partitions); larger probes skip the bucket-
     collect job entirely. Both strategies must equal the plain shuffle
@@ -926,7 +944,7 @@ def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
     assert pf, plan  # the seen scan is bucket-pruned at listing time
     assert "Exchange hashpartitioning(url_canon" not in plan  # seen never shuffles
 
-    engine.config.seen_prune_max_probe = 0  # force the skip-prune branch
+    engine._PRUNE_MAX_PROBE = 0  # force the skip-prune branch
     unpruned = engine._links_minus_seen(links, seen, n)
     assert sorted(r.url_canon for r in unpruned.select("url_canon").collect()) == expected
     plan2 = unpruned._jdf.queryExecution().executedPlan().toString()
@@ -937,29 +955,133 @@ def test_seen_probe_prune_threshold(spark, tiny_fixture, tmp_path_factory):
 def test_seen_probe_cap_follows_broadcast_threshold(spark, tiny_fixture, tmp_path):
     """The derived probe-row cap is Spark's own parse of
     autoBroadcastJoinThreshold over ~96 B/row; "-1" (auto-broadcast off)
-    keeps the 10 MB budget, and an explicit seen_probe_broadcast_max
-    wins over either."""
+    keeps the 10 MB budget. The same cap decides the robots stamp: the
+    whole robots table broadcasts iff it has at most that many rows,
+    otherwise the stamp scans the persisted robots_dim."""
     pages = spark.read.parquet(tiny_fixture["pages"])
+    robots = spark.read.parquet(tiny_fixture["robots"])  # 50 hosts
+    rows = spark.createDataFrame(
+        [("host0.example", "/p/1")], "host string, path string"
+    )
 
-    def cap(**kw):
-        eng = CrawlEngine(
-            spark, pages, _registry(),
-            config=EngineConfig(workdir=str(tmp_path), **kw),
+    def engine():
+        return CrawlEngine(
+            spark, pages, _registry(), robots_df=robots,
+            config=EngineConfig(workdir=str(tmp_path)),
         )
-        return eng._seen_probe_max()
+
+    def stamp_broadcasts(eng):
+        # `rows` is a local relation: any FileScan is the robots_dim scan
+        stamped = eng._stamp_robots(rows, 1)
+        return "FileScan" not in stamped._jdf.queryExecution().executedPlan().toString()
 
     row_bytes = CrawlEngine._PROBE_ROW_BYTES
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, "64MB")
-        assert cap() == (64 << 20) // row_bytes
-        assert cap(seen_probe_broadcast_max=123) == 123
+        assert engine()._seen_probe_max() == (64 << 20) // row_bytes
         spark.conf.set(key, "-1")
-        assert cap() == (10 << 20) // row_bytes
-        assert cap(seen_probe_broadcast_max=123) == 123
+        assert engine()._seen_probe_max() == (10 << 20) // row_bytes
+        # caps 50 and 49 straddle the fixture's 50 robots rows
+        for thr, broadcast in [
+            ("64MB", True), ("-1", True),
+            (str(50 * row_bytes), True), (str(50 * row_bytes - 1), False),
+        ]:
+            spark.conf.set(key, thr)
+            eng = engine()
+            assert (eng._n_robots <= eng._seen_probe_max()) == broadcast, thr
+            assert stamp_broadcasts(eng) == broadcast, thr
     finally:
         spark.conf.set(key, old)
+
+
+def test_engine_config_rejects_removed_knobs():
+    """The broadcast caps follow one byte budget and the probe sizes are
+    engine constants, so their old EngineConfig fields (and the never-set
+    ones) are gone; robots_buckets must be a positive int because the
+    stamp always probes the rb-bucketed robots_dim above the cap."""
+    for name in (
+        "default_crawl_delay", "bloom_hashes", "pages_bucket_col",
+        "seen_probe_broadcast_max", "robots_broadcast_max",
+        "seen_prune_max_probe", "max_hot_hosts",
+    ):
+        with pytest.raises(TypeError):
+            EngineConfig(**{name: 0})
+    for bad in (None, 0):
+        with pytest.raises(ValueError, match="robots_buckets"):
+            EngineConfig(robots_buckets=bad)
+
+
+def test_stamp_robots_branches_agree(spark, tiny_fixture, tmp_path):
+    """Above the broadcast row cap the add-time stamp probes the
+    persisted robots_dim: up to _PRUNE_MAX_PROBE distinct hosts become
+    rb + host IN-lists on the scan, more hosts left-semi the scan against
+    the broadcast host set, and a host set above the cap itself takes a
+    shuffle join. Each branch must stamp the same (crawl_delay, denied)
+    as the small-dim broadcast, row for row."""
+    from pyspark.sql import functions as F
+
+    pages = spark.read.parquet(tiny_fixture["pages"])
+    rows = (
+        pages.select(
+            "url",
+            F.expr("parse_url(url, 'HOST')").alias("host"),
+            F.expr("parse_url(url, 'PATH')").alias("path"),
+        )
+        .unionByName(spark.createDataFrame(
+            [("x1", "host2.example", "/submit/x"), ("x2", "nohost.example", "/x")],
+            "url string, host string, path string",
+        ))
+        .localCheckpoint(eager=True)
+    )
+    n = rows.count()  # 502 rows over 49 hosts (48 fixture hosts + 1)
+    eng = CrawlEngine(
+        spark, pages, _registry(),
+        robots_df=spark.read.parquet(tiny_fixture["robots"]),
+        config=EngineConfig(workdir=str(tmp_path)),
+    )
+
+    def stamp(thr=None, prune_max=CrawlEngine._PRUNE_MAX_PROBE):
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        eng._PRUNE_MAX_PROBE = prune_max
+        try:
+            if thr is not None:
+                spark.conf.set(key, thr)
+            out = eng._stamp_robots(rows, n)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            got = sorted(
+                (r.url, r.crawl_delay, r.denied)
+                for r in out.select("url", "crawl_delay", "denied").collect()
+            )
+        finally:
+            spark.conf.set(key, old)
+        return plan, got
+
+    ref_plan, ref = stamp()
+    # `rows` is checkpointed, so any FileScan is the robots_dim scan
+    assert "FileScan" not in ref_plan  # 50 rows ≤ the default cap
+    assert any(d for _, _, d in ref) and any(c for _, c, _ in ref)
+    assert ("x2", None, False) in ref  # no robots row: no delay, allowed
+
+    row_bytes = CrawlEngine._PROBE_ROW_BYTES
+    # cap 10 < 49 hosts ≤ 2048: rb + host IN-lists on the robots_dim scan
+    plan, got = stamp(thr=str(10 * row_bytes))
+    assert got == ref
+    assert "FileScan" in plan
+    assert "LeftSemi" not in plan and "SortMergeJoin" not in plan, plan
+    # cap 49 ≥ 49 hosts, IN-list off: the scan semi-joins the broadcast hosts
+    plan, got = stamp(thr=str(49 * row_bytes), prune_max=0)
+    assert got == ref
+    assert any(
+        "BroadcastHashJoin" in ln and "LeftSemi" in ln for ln in plan.splitlines()
+    ), plan
+    assert "SortMergeJoin" not in plan
+    # cap 10 < 49 hosts, IN-list off: shuffle join against the scan
+    plan, got = stamp(thr=str(10 * row_bytes), prune_max=0)
+    assert got == ref
+    assert "SortMergeJoin" in plan and "LeftSemi" not in plan, plan
 
 
 def test_seen_probe_scans_prebucketing_deltas(spark, tiny_fixture, tmp_path_factory):
@@ -1053,18 +1175,17 @@ def test_host_state_delta_log_bounded_merge_and_compaction(
     golden = _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=5)
 
     wd = str(tmp_path_factory.mktemp("hs_work"))
-    mk = lambda: CrawlEngine(  # noqa: E731
+    # the fixture robots is below the small-dim broadcast cap —
+    # force the pruned-scan probe this test pins
+    mk = lambda: _zero_broadcast_cap(CrawlEngine(  # noqa: E731
         spark,
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=40, max_rounds=5, workdir=wd,
-            host_state_compact_min_deltas=4, collect_transcript=True,
-            # the fixture robots is below the small-dim broadcast cap
-            # (round 5) — force the pruned-scan probe this test pins
-            robots_broadcast_max=0),
-    )
+            host_state_compact_min_deltas=4, collect_transcript=True),
+    ))
     mk().run(seeds, max_rounds=2)  # "crash" after round 1's commit
     dim = os.path.join(wd, "robots_dim")
     mtime_before_resume = os.path.getmtime(dim)
@@ -1203,18 +1324,16 @@ def test_robots_dim_rebuilt_when_missing(spark, tiny_fixture, tmp_path_factory):
     pages, seeds, robots = _load(tiny_fixture)
     golden = _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=5)
     wd = str(tmp_path_factory.mktemp("rbdim_work"))
-    mk = lambda: CrawlEngine(  # noqa: E731
+    # force the probe path: the tiny fixture would otherwise broadcast
+    # the dim outright and never persist robots_dim
+    mk = lambda: _zero_broadcast_cap(CrawlEngine(  # noqa: E731
         spark,
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,
-                            collect_transcript=True,
-                            # force the probe path (round 5): the tiny
-                            # fixture would otherwise broadcast the dim
-                            # outright and never persist robots_dim
-                            robots_broadcast_max=0),
-    )
+                            collect_transcript=True),
+    ))
     mk().run(seeds, max_rounds=2)
     shutil.rmtree(os.path.join(wd, "robots_dim"))
     res = mk().run(seeds, resume=True)

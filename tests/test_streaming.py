@@ -257,29 +257,29 @@ def test_kafka_seed_projection(spark):
         reader.load()
 
 
+def _stage_file(spark, tmp_path, staging, name):
+    """Stage one complete single-row parquet file as ``staging/name``."""
+    url = "http://h.example/" + name
+    row = [(url, url, "h.example", "/" + name, 1, 1, 0, [], None, None)]
+    work = tmp_path / ("w_" + name)
+    spark.createDataFrame(row, STAGED_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(work))
+    src = next(f for f in os.listdir(work) if f.endswith(".parquet"))
+    os.rename(work / src, staging / name)
+
+
 def test_drain_skips_incomplete_parquet_files(spark, tmp_path):
     """The streaming file sink writes part files in place and the
     parquet footer LAST — the drain trusts a file only once its
     trailing PAR1 magic exists, so torn/in-progress files are skipped
     (and retried next round once complete) while complete files drain
     regardless of how they were staged (sink, old batch append, cli)."""
-    import os
-
-    from crawl_spark.streaming.feed import STAGED_SCHEMA, drain_staged_seeds
-
     staging = tmp_path / "staged"
     staging.mkdir()
 
     def stage(name):
-        row = [("http://h.example/" + name, "http://h.example/" + name,
-                "h.example", "/" + name, 1, 1, 0, [], None, None)]
-        spark.createDataFrame(row, STAGED_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / ("w_" + name)))
-        src = next(
-            f for f in os.listdir(tmp_path / ("w_" + name)) if f.endswith(".parquet")
-        )
-        os.rename(tmp_path / ("w_" + name) / src, staging / name)
+        _stage_file(spark, tmp_path, staging, name)
 
     stage("part-sinkbatch.parquet")   # sink-written, complete
     stage("part-oldappend.parquet")   # pre-upgrade batch append, complete
@@ -298,6 +298,35 @@ def test_drain_skips_incomplete_parquet_files(spark, tmp_path):
     os.replace(staging / "part-torn2.parquet", staging / "part-torn.parquet")
     df2, files2 = drain_staged_seeds(spark, str(staging), exclude=set(files))
     assert files2 == ["part-torn.parquet"] and df2.count() == 1
+
+
+def test_drain_skips_staged_files_that_vanish(spark, tmp_path, monkeypatch):
+    """A streaming sink stopped mid-batch deletes its in-flight part
+    files, possibly after the drain listed them. A file that vanishes
+    between listing and read — before the DataFrame is created, or after
+    it is created and before it runs — is skipped, and the drain returns
+    exactly the rows of the surviving files."""
+    from crawl_spark.streaming import feed
+
+    staging = tmp_path / "staged"
+    staging.mkdir()
+    for name in ("part-a.parquet", "part-b.parquet", "part-c.parquet"):
+        _stage_file(spark, tmp_path, staging, name)
+
+    complete = feed._parquet_complete
+
+    def listed_then_deleted(path):
+        ok = complete(path)
+        if path.endswith("part-b.parquet"):
+            os.remove(path)  # passes the listing, gone before the read
+        return ok
+
+    monkeypatch.setattr(feed, "_parquet_complete", listed_then_deleted)
+    df, files = drain_staged_seeds(spark, str(staging))
+    monkeypatch.undo()
+    assert files == ["part-a.parquet", "part-c.parquet"]
+    os.remove(staging / "part-c.parquet")  # gone after the DataFrame exists
+    assert [r.url_canon for r in df.collect()] == ["http://h.example/part-a.parquet"]
 
 
 def test_seed_feed_watermark_bounded_dedup(spark, tmp_path):

@@ -13,8 +13,8 @@ compacted case, never a per-round delta):
   probe    hits = seen ⋉ broadcast(links); unseen = links ⋉̸
            broadcast(hits) — the seen side is SCANNED past a hash table
            of the bounded links batch; no shuffle, no sort, no shuffle
-           files. This is the round-3 default
-           (seen_probe_broadcast_max).
+           files. This is the round-3 default (up to the
+           autoBroadcastJoinThreshold-derived row cap).
   +bloom   the probe path behind the per-bucket Bloom pre-filter
            (use_bloom=True shape): only possibly-seen candidates reach
            the probe join.

@@ -146,10 +146,6 @@ def main() -> None:
         robots_df=spark.read.parquet(fx["robots"]),
         config=EngineConfig(
             batch_cap=25, max_rounds=3, workdir=tempfile.mkdtemp(prefix="plans_wd_"),
-            # the fixture robots is tiny — at real scale it would take
-            # the small-dim broadcast fast path; force the pruned-scan
-            # probe so the captured plan shows the >cap strategy
-            robots_broadcast_max=0,
             # per-round seen deltas are flat; compaction writes the
             # sb-bucketed layout the membership-check plan (§9) prunes
             seen_compact_min_deltas=2,
@@ -295,7 +291,11 @@ def main() -> None:
     spark.sql("DROP TABLE IF EXISTS plans_graph_edges")
 
     # 15. politeness stamp probe (round 4): robots is a pruned SCAN,
-    # never a whole-table broadcast
+    # never a whole-table broadcast. The fixture's 50-host robots table
+    # fits the default broadcast byte budget; a 1 KB budget (a 10-row
+    # cap) sends the stamp down the >cap probe path, which persists
+    # robots_dim on first use, so the capture shows that strategy.
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
     stamp_links = (
         eng.read_table("frontier")
         .select("host", "path")
@@ -315,12 +315,14 @@ def main() -> None:
         "autoBroadcastJoinThreshold-derived row cap the stamp instead "
         "broadcasts the whole (cached) dim outright — no probe job at "
         "all (e6: 0.25 s at 10^5 hosts); this capture forces the "
-        ">cap probe path (robots_broadcast_max=0) to show its shape. "
+        ">cap probe path (a 1 KB autoBroadcastJoinThreshold) to show "
+        "its shape. "
         "The ≤|batch hosts| surviving slice broadcasts back onto the "
         "rows; the round loop then applies the verdict as a plain "
         "column predicate — no robots join anywhere per round.",
         eng._stamp_robots(stamp_links, 30),
     )
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     # 16. active host-state slice (merge-on-read delta log)
     hs = eng._read_host_state_deltas(eng.snapshots()[-1]["host_state_deltas"])
