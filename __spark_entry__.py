@@ -114,8 +114,7 @@ def flagship_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, pages, reg,
         config=EngineConfig(
             batch_cap=64,
-            workdir=tempfile.mkdtemp(prefix="crawl_flagship_"),
-            collect_transcript=True),
+            workdir=tempfile.mkdtemp(prefix="crawl_flagship_")),
     )
     seeds = [
         {"url": "http://host%d.example/p/%d" % (i % 20, i), "callbacks": ["page"]}
@@ -124,7 +123,7 @@ def flagship_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = eng.run(seeds, max_rounds=3)
     rows = [
         (r, p + 1, u)
-        for r, batch in enumerate(res.transcript)
+        for r, batch in enumerate(res.read_transcript(spark))
         for p, u in enumerate(batch)
     ]
     return spark.createDataFrame(rows, "round int, batch_pos int, url_canon string")

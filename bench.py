@@ -87,8 +87,8 @@ def ensure_pages_fixture(
 
 
 def run_crawl(spark, pages_dir: str, n_pages: int, rounds: int = 3) -> dict:
-    """The headline crawl: large seeded frontier, politeness path on,
-    transcript collection off.  Returns throughput counters."""
+    """The headline crawl: large seeded frontier, politeness path on.
+    Returns throughput counters."""
     from pyspark.sql import functions as F
 
     from crawl_spark.plans.engine import CrawlEngine, EngineConfig
@@ -105,7 +105,6 @@ def run_crawl(spark, pages_dir: str, n_pages: int, rounds: int = 3) -> dict:
         config=EngineConfig(
             batch_cap=max(1000, n_pages // 4),
             workdir=wd,
-            collect_transcript=False,
         ),
     )
     seed_urls = [

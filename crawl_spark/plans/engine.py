@@ -14,7 +14,7 @@ DataFrame dataflow:
       new      = explode links -> canonicalize -> in-round dedup
                  -> anti-join seen
       frontier log += (adds=new, dels=this round's transcript);
-      seen log += new;  host clock advances
+      seen log += a reference to that add delta;  host clock advances
       -> snapshot (parquet per round under workdir; lineage truncation;
          seen is an APPEND-ONLY delta log and the frontier is a
          MERGE-ON-READ log — base ∪ adds − dels, with expired and
@@ -139,12 +139,17 @@ _SEEN_SCHEMA = T.StructType(
     ]
 )
 
-# on-disk layout of the seen log: per-round deltas (`seen_deltas/delta_*`)
-# are one flat dir of url_hash-sorted files; compacted dirs
-# (`seen_deltas/delta=compact_*`) are hive-partitioned by the url_hash
-# bucket (sb=pmod(url_hash, seen_buckets)/), files sorted by url_hash
-# within each bucket so parquet row-group min/max stats can skip.
-# Both are read with this schema (flat dirs get sb computed)
+# on-disk layout of the seen log: per-round entries are flat dirs (the
+# frontier's own `frontier_log/base_seed` and `add_*` dirs; older
+# workdirs' `seen_deltas/delta_*` dirs of the _SEEN_SCHEMA columns), read
+# with _SEEN_FLAT_SCHEMA; compacted dirs (`seen_deltas/delta=compact_*`)
+# are hive-partitioned by the url_hash bucket (sb=pmod(url_hash,
+# seen_buckets)/), files sorted by url_hash within each bucket so parquet
+# row-group min/max stats can skip. Every read yields
+# _SEEN_BUCKETED_SCHEMA (flat dirs get sb computed)
+_SEEN_FLAT_SCHEMA = T.StructType(
+    _SEEN_SCHEMA.fields + [T.StructField("round_added", T.IntegerType())]
+)
 _SEEN_BUCKETED_SCHEMA = T.StructType(
     _SEEN_SCHEMA.fields + [T.StructField("sb", T.IntegerType())]
 )
@@ -162,12 +167,6 @@ class EngineConfig:
     batch_cap: int = 1000
     max_rounds: int = 50
     workdir: str = "/tmp/crawl_spark_work"
-    # driver-side transcript copy: OFF by default — it grows
-    # O(rounds × batch_cap) in driver memory. The parquet `transcript`
-    # table per round is the durable record; use
-    # ``CrawlResult.read_transcript(spark)`` to reconstruct the list, or
-    # opt in here for tests/small crawls.
-    collect_transcript: bool = False
     # accepted and ignored: every batch is selected by ranked_topk. The
     # benchmark harness (frontierbench/measure.py) is the last caller
     # that still passes it; not a field, so it is neither stored nor
@@ -194,7 +193,11 @@ class EngineConfig:
     # compacting every ~32 rounds amortizes the O(|seen|) rewrite to
     # 1/32 of rounds while keeping reads at ≤32 dirs. 0 disables.
     # Compaction is also what writes the bucketed (sb=) layout that the
-    # small-probe directory prune needs; per-round deltas are flat.
+    # small-probe directory prune needs; the per-round entries are the
+    # frontier's flat add dirs. It also bounds how long those add dirs
+    # (and frontier_log/base_seed) stay on disk: a frontier compaction
+    # drops them from the frontier log, but the reaper keeps each one
+    # until the seen compaction replaces its seen entry.
     seen_compact_min_deltas: int = 32
     # seen-set hash-bucket count: every compacted seen dir is hive-
     # partitioned by sb = pmod(url_hash, seen_buckets) (SURVEY §4.2's
@@ -252,7 +255,6 @@ class EngineConfig:
 
 @dataclass
 class CrawlResult:
-    transcript: list = field(default_factory=list)
     counters: list = field(default_factory=list)
     rounds: int = 0
     workdir: str = ""
@@ -266,9 +268,8 @@ class CrawlResult:
         return sum(c.get("scheduled", 0) for c in self.counters)
 
     def read_transcript(self, spark: SparkSession) -> list[list[str]]:
-        """Reconstruct the per-round dequeue transcript from the durable
-        parquet `transcript` tables (the O(batch_cap)-per-round record) —
-        the opt-in replacement for ``collect_transcript=True``."""
+        """The per-round dequeue transcript, read from the durable
+        parquet `transcript` tables (the O(batch_cap)-per-round record)."""
         out = []
         for rr in range(self.rounds):
             tp = os.path.join(self.workdir, "round_%05d" % rr, "transcript")
@@ -664,13 +665,6 @@ class CrawlEngine:
         c["deferred_by_politeness"] = n_allowed - n_batch
         tick("batch_select")
 
-        transcript = None
-        if cfg.collect_transcript:
-            transcript = [
-                row.url_canon
-                for row in batch.select("url_canon", "batch_pos").orderBy("batch_pos").collect()
-            ]
-
         # 6. host clock update — the round's host_state DELTA (≤ batch
         # hosts rows; identity/empty when politeness is inactive).
         # crawl_delay rides the batch rows (stamped at add time,
@@ -870,9 +864,9 @@ class CrawlEngine:
         new_rows = self._stamp_robots(
             new_rows, n_valid, hosts_src=links
         ).select(*_FRONTIER_COLS)
-        # new_rows feeds BOTH the frontier and the seen snapshot writes —
-        # materialize once so the dedup window + seen anti-join don't run
-        # twice. Bounded by the links of one batch.
+        # new_rows feeds the add write, the scheduled count and the Bloom
+        # update — materialize once so the dedup window + seen anti-join
+        # don't run per consumer. Bounded by the links of one batch.
         new_rows = new_rows.localCheckpoint(eager=True)
         tick("dedup_antijoin")
 
@@ -888,30 +882,23 @@ class CrawlEngine:
         # by predicate. Exactness of url-list deletes rests on the
         # seen-set invariant: a url that ever entered the frontier is in
         # `seen`, so it can never be re-added — dels and adds never
-        # collide.
+        # collide. The invariant holds by construction: the caller lists
+        # the add dir it writes from these rows as the seen log's entry
+        # for this round (APPEND-ONLY seen: the set is the union of its
+        # entries, never rewritten except by compaction).
         frontier_adds = new_rows
-        # APPEND-ONLY seen semantics: the round emits only the DELTA (this
-        # round's newly-seen urls). The caller appends it to the delta log;
-        # the full seen set is the union of delta files — never rewritten.
-        # At a 10^10-row seen set this bounds per-round snapshot writes by
-        # |new_rows|, not |seen| (Iceberg fast-append, SURVEY §4.2).
-        seen_delta = new_rows.select(
-            "url_canon", "url_hash", "host_hash",
-            F.col("round_added").alias("first_round"),
-        )
         # union EVERY error part (robots + each middleware's aborts +
         # fetch misses) — middlewares append parts between the first and
         # last, so a pairwise union would silently drop them
         import functools
 
         errors_df = functools.reduce(lambda a, b: a.unionByName(b), errors_parts)
-        # the durable transcript record (url_canon, batch_pos) — the
-        # driver-side `transcript` list is an optional test convenience,
-        # the parquet table is the O(batch_cap)-per-round source of truth
-        # (and the frontier log's del entry for this round)
+        # the durable transcript record (url_canon, batch_pos): the
+        # O(batch_cap)-per-round source of truth, and the frontier log's
+        # del entry for this round
         transcript_df = batch.select("url_canon", "batch_pos")
-        return (frontier_adds, seen_delta, host_state_delta,
-                errors_df, extracted, transcript_df, c, transcript, n_valid)
+        return (frontier_adds, host_state_delta,
+                errors_df, extracted, transcript_df, c, n_valid)
 
     @staticmethod
     def _make_tick(phase_s: dict):
@@ -1249,10 +1236,12 @@ class CrawlEngine:
         every dir under the state logs it does not reference — deltas a
         compaction or a rebase replaced, and the orphans a crash leaves
         between a delta write and its commit or between a commit and this
-        cleanup. Round dirs (whose transcripts are the frontier's del
-        entries) and ``robots_dim/`` are never touched. Older manifests
-        lose time-travel over reaped dirs: the documented retention
-        contract."""
+        cleanup. A frontier add dir is also a seen entry, so it lives
+        until neither log references it: a frontier compaction or a
+        rebase leaves it to the seen compaction. Round dirs (whose
+        transcripts are the frontier's del entries) and ``robots_dim/``
+        are never touched. Older manifests lose time-travel over reaped
+        dirs: the documented retention contract."""
         log = manifest["frontier_log"]
         keep = {
             os.path.normpath(p)
@@ -1282,8 +1271,8 @@ class CrawlEngine:
         errors/extracted/transcript) at a given committed round (default:
         latest). Raises if that table was pruned by retention/compaction.
 
-        ``seen`` is append-only: each manifest lists the delta dirs whose
-        union IS the seen set at that snapshot — the read unions them
+        ``seen`` is append-only: each manifest lists the dirs whose union
+        IS the seen set at that snapshot — the read unions them
         (merge-on-read); nothing is ever rewritten except by compaction.
         """
         r = snapshot if snapshot is not None else self.latest_round()
@@ -1447,9 +1436,11 @@ class CrawlEngine:
         }
 
     # -- seen delta log ----------------------------------------------------
-    # The seen set is an append-only log of delta dirs. Per-round deltas
-    # are one FLAT dir of url_hash-sorted files (bounded by one batch's
-    # fan-out: a handful of files, listed on the driver). Compaction
+    # The seen set is an append-only log of dirs. Its per-round entries
+    # are the frontier's FLAT add dirs (bounded by one batch's fan-out: a
+    # handful of files) — every url that entered the frontier is seen,
+    # so the seen log points at those rows instead of keeping a second
+    # copy of them. Compaction
     # rewrites the union as one hash-BUCKETED dir, hive-partitioned by
     # sb = pmod(url_hash, seen_buckets) with files range-laid-out and
     # sorted by url_hash (parquet min/max row-group stats line up with
@@ -1459,18 +1450,24 @@ class CrawlEngine:
     # to the buckets the round's links touch. Either way the seen side
     # is only ever SCANNED, never shuffled.
     def _read_seen(self, rels: list[str]) -> DataFrame:
-        """The seen set = the delta-log dirs (merge-on-read), read as at
+        """The seen set = the log's entries (merge-on-read), read as at
         most TWO multi-path scans; carries the ``sb`` bucket column for
         partition pruning.
 
         Bucketed (compacted) dirs are hive partitions
         ``seen_deltas/delta=<name>/sb=NN``, so one ``parquet(p1, p2, …)``
-        with ``basePath=seen_deltas`` covers them. Flat dirs (per-round
-        deltas, and workdirs from before bucketing) cannot share that
-        scan — mixing them raises CONFLICTING_DIRECTORY_STRUCTURES, and
-        read alone they'd surface sb=NULL — so they get a second flat
-        scan with sb COMPUTED from url_hash (same pmod as the compaction
-        writer), which keeps ``sb``-filtered membership checks exact.
+        with ``basePath=seen_deltas`` covers them. Every other entry is a
+        flat dir: the frontier's ``frontier_log/base_seed`` and ``add_*``
+        dirs, and the ``seen_deltas/delta_*`` dirs of older workdirs
+        (pre-bucketing ones included). They cannot share the hive scan —
+        mixing raises CONFLICTING_DIRECTORY_STRUCTURES, and read alone
+        they'd surface sb=NULL — so they get ONE flat scan under
+        _SEEN_FLAT_SCHEMA: ``first_round`` is the stored column where an
+        old seen dir has it and the row's ``round_added`` in a frontier
+        dir (the round a url entered the frontier is the round it was
+        first seen), and sb is COMPUTED from url_hash (same pmod as the
+        compaction writer), which keeps ``sb``-filtered membership checks
+        exact.
         Multi-path scans, not a union of per-dir reads: a per-dir union
         would make every downstream join fan out per branch — the
         membership check's broadcast of the links batch was rebuilt once
@@ -1495,8 +1492,11 @@ class CrawlEngine:
         if flat_rels:
             paths = [os.path.join(self.config.workdir, rel) for rel in flat_rels]
             parts.append(
-                self.spark.read.schema(_SEEN_SCHEMA)
+                self.spark.read.schema(_SEEN_FLAT_SCHEMA)
                 .parquet(*paths)
+                .withColumn(
+                    "first_round", F.coalesce("first_round", "round_added")
+                )
                 .withColumn(
                     "sb",
                     F.pmod(
@@ -1517,8 +1517,8 @@ class CrawlEngine:
         Layout: partitionBy(sb) subdirs, files url_hash-sorted. The input
         is the entire seen set, where intra-bucket parallelism matters:
         the range layout on (sb, url_hash) gives every core a slice of
-        the big buckets. Per-round deltas do not come here — they go
-        through the flat ``_write_delta``."""
+        the big buckets. Per-round entries do not come here — they are
+        the frontier's flat add dirs."""
         rel = os.path.join("seen_deltas", "delta=" + name)
         final = os.path.join(self.config.workdir, rel)
         tmp = final + ".tmp"
@@ -1627,13 +1627,13 @@ class CrawlEngine:
             F.broadcast(hits.select("url_canon")), "url_canon", "left_anti"
         )
 
-    def _write_delta(self, df: DataFrame, name: str, log: str = "seen_deltas") -> str:
-        """Write one flat delta dir atomically (tmp + rename); returns the
-        workdir-relative path the manifest should reference. Seen deltas
-        keep the seen columns only, url_hash-sorted within each file."""
-        if log == "seen_deltas":
-            df = df.select(*[f.name for f in _SEEN_SCHEMA.fields])
-            df = df.sortWithinPartitions("url_hash")
+    def _write_delta(self, df: DataFrame, name: str, log: str) -> str:
+        """Write ``df`` as one flat dir ``<log>/<name>`` atomically (tmp +
+        rename); returns the workdir-relative path the manifest should
+        reference. No sort: the seen probe is a broadcast left-semi join,
+        and the only filter pushed into a seen scan is the compacted
+        dirs' ``sb`` partition prune, so row order within a flat file
+        buys nothing."""
         rel = os.path.join(log, name)
         final = os.path.join(self.config.workdir, rel)
         tmp = final + ".tmp"
@@ -1793,9 +1793,7 @@ class CrawlEngine:
         n_frontier = live.count()
         self._ensure_robots_dim()  # new fingerprint → fresh bucketed layout
         restamped = self._stamp_robots(live, n_frontier).select(*_FRONTIER_COLS)
-        new_base = self._write_delta(
-            restamped, "base_rebase_%05d" % k, log="frontier_log"
-        )
+        new_base = self._write_delta(restamped, "base_rebase_%05d" % k, "frontier_log")
         manifest = {
             **manifest,
             "frontier_log": {
@@ -1812,8 +1810,9 @@ class CrawlEngine:
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.rename(tmp, os.path.join(base, "manifest.json"))  # atomic commit
-        # the committed manifest references only the restamped base:
-        # the old epoch's base and adds go (its dels are transcripts)
+        # the committed manifest's frontier log is only the restamped
+        # base: the old epoch's base and adds go, except those the seen
+        # log still lists (its dels are transcripts)
         self._reap(manifest)
         return manifest
 
@@ -1825,10 +1824,10 @@ class CrawlEngine:
         analog): drain the staging table, drop urls already seen,
         seq-stamp deterministically (after all link seqs of the round —
         url_canon order; the staged batch is bounded out-of-band input,
-        so its single-partition stamp window is bounded too), append
-        them to BOTH delta logs, and union them into this round's
-        frontier. Re-drained rows are idempotent: once picked up they
-        are in `seen`, so later drains drop them."""
+        so its single-partition stamp window is bounded too), write them
+        as one frontier add dir that is also their seen entry, and union
+        them into this round's frontier. Re-drained rows are idempotent:
+        once picked up they are in `seen`, so later drains drop them."""
         from ..streaming.feed import drain_staged_seeds
 
         staged, new_files = drain_staged_seeds(
@@ -1885,23 +1884,15 @@ class CrawlEngine:
         # politeness stamp at add time (bounded by the staged batch)
         rows = self._stamp_robots(rows, n).select(*_FRONTIER_COLS)
         rows = rows.localCheckpoint(eager=True)
-        # append to both logs NOW; the round's manifest commit references
-        # them (a crash before commit leaves overwritable orphans — the
-        # same replay semantics as the round deltas)
-        self._seen_rels = self._seen_rels + [
-            self._write_delta(
-                rows.select(
-                    "url_canon", "url_hash", "host_hash",
-                    F.col("round_added").alias("first_round"),
-                ),
-                "delta_%05d_staged" % r,
-            )
-        ]
+        # write NOW and append to both logs; the round's manifest commit
+        # references the dir (a crash before commit leaves an
+        # overwritable orphan — the same replay semantics as the round's
+        # add dir)
+        add_rel = self._write_delta(rows, "add_%05d_staged" % r, "frontier_log")
+        self._seen_rels = self._seen_rels + [add_rel]
         self._frontier_log = {
-            "base": self._frontier_log["base"],
-            "adds": self._frontier_log["adds"]
-            + [self._write_delta(rows, "add_%05d_staged" % r, log="frontier_log")],
-            "dels": self._frontier_log["dels"],
+            **self._frontier_log,
+            "adds": self._frontier_log["adds"] + [add_rel],
         }
         return frontier.unionByName(rows), n
 
@@ -1946,6 +1937,7 @@ class CrawlEngine:
                 # manifests are O(1): rebuild run history from the
                 # per-round manifests + transcript tables (never embedded)
                 res.counters = [m["counters"] for m in self.snapshots()]
+                res.rounds = last + 1
                 # next-frontier size is derivable from the last counters —
                 # saves a count job (deferred rows + newly scheduled)
                 lc = manifest["counters"]
@@ -1955,10 +1947,6 @@ class CrawlEngine:
                 n_frontier = manifest.get(
                     "n_frontier", lc["deferred_by_politeness"] + lc["scheduled"]
                 )
-                if cfg.collect_transcript:
-                    # reuse the one reconstruction implementation
-                    res.rounds = last + 1
-                    res.transcript = res.read_transcript(spark)
                 start_round = last + 1
                 if cfg.use_bloom:
                     from ..operators.bloom import build_bitmaps, load_bitmaps
@@ -1981,18 +1969,12 @@ class CrawlEngine:
             # stamp is the first probe against it
             self._ensure_robots_dim()
             seeded = self.seed_frontier(seeds)
-            seed_seen = seeded.select(
-                "url_canon", "url_hash", "host_hash", F.lit(0).alias("first_round")
-            )
-            # both logs' first entries: the seed rows (written once)
-            self._frontier_log = {
-                "base": self._write_delta(seeded, "base_seed", log="frontier_log"),
-                "adds": [],
-                "dels": [],
-            }
+            # both logs' first entry: the seed rows, written once
+            seed_rel = self._write_delta(seeded, "base_seed", "frontier_log")
+            self._frontier_log = {"base": seed_rel, "adds": [], "dels": []}
             frontier = self._read_frontier(self._frontier_log, -1)
             n_frontier = self._n_seeded
-            self._seen_rels = [self._write_delta(seed_seen, "delta_seed")]
+            self._seen_rels = [seed_rel]
             seen = self._read_seen(self._seen_rels)
             self._host_state_rels = []
             host_state = self._read_host_state_deltas(self._host_state_rels)
@@ -2014,8 +1996,8 @@ class CrawlEngine:
                 break
             phase_s: dict[str, float] = {}
             tick = self._make_tick(phase_s)
-            (frontier_adds, seen_delta, host_state_n, errors_df,
-             extracted, transcript_df, c, transcript, n_valid) = self._round(
+            (frontier_adds, host_state_n, errors_df,
+             extracted, transcript_df, c, n_valid) = self._round(
                 r, frontier, seen, host_state, tick
             )
             c["staged"] = n_staged
@@ -2043,18 +2025,15 @@ class CrawlEngine:
                 # file-level lineage: the output files this snapshot owns
                 lineage[name] = self._parquet_files(path)
                 tick("write_" + name)
-            # append this round's seen DELTA to the log (atomic rename; a
-            # crash before manifest commit leaves an unreferenced dir,
-            # which the round replay overwrites or the next commit's
-            # _reap deletes — Iceberg orphan-file semantics)
-            delta_rel = self._write_delta(seen_delta, "delta_%05d" % r)
-            lineage["seen"] = self._parquet_files(os.path.join(cfg.workdir, delta_rel))
-            tick("write_seen_delta")
             # frontier log: append this round's add delta (bounded by the
             # batch's links); the del entry is the transcript written
-            # above. Materialize a new base only every
-            # `frontier_compact_every` rounds
-            add_rel = self._write_delta(frontier_adds, "add_%05d" % r, log="frontier_log")
+            # above. The same dir is the seen log's entry for this round.
+            # Atomic rename: a crash before manifest commit leaves an
+            # unreferenced dir, which the round replay overwrites or the
+            # next commit's _reap deletes — Iceberg orphan-file semantics.
+            # Materialize a new base only every `frontier_compact_every`
+            # rounds
+            add_rel = self._write_delta(frontier_adds, "add_%05d" % r, "frontier_log")
             lineage["frontier"] = self._parquet_files(os.path.join(cfg.workdir, add_rel))
             frontier_log_next = {
                 **self._frontier_log,  # keeps a rebase's restamped_at
@@ -2073,7 +2052,7 @@ class CrawlEngine:
                     },
                     r,
                 )
-                new_base = self._write_delta(merged, "base_%05d" % r, log="frontier_log")
+                new_base = self._write_delta(merged, "base_%05d" % r, "frontier_log")
                 # restamped_at is intentionally dropped: the merge above
                 # ran at upto_r = r ≥ the rebase round, so every
                 # re-stamped denial has been processed and predicate-
@@ -2088,9 +2067,7 @@ class CrawlEngine:
             # the empty identity).
             host_state_rels_next = self._host_state_rels
             if self._politeness_active:
-                hs_rel = self._write_delta(
-                    host_state_n, "hs_%05d" % r, log="host_state_log"
-                )
+                hs_rel = self._write_delta(host_state_n, "hs_%05d" % r, "host_state_log")
                 lineage["host_state"] = self._parquet_files(
                     os.path.join(cfg.workdir, hs_rel)
                 )
@@ -2106,11 +2083,11 @@ class CrawlEngine:
                             self._read_host_state_deltas(host_state_rels_next)
                         ),
                         "hs_compact_%05d" % r,
-                        log="host_state_log",
+                        "host_state_log",
                     )
                     host_state_rels_next = [hs_compact]
                     tick("compact_host_state")
-            seen_rels_next = self._seen_rels + [delta_rel]
+            seen_rels_next = self._seen_rels + [add_rel]
             if (
                 cfg.seen_compact_min_deltas
                 and len(seen_rels_next) >= cfg.seen_compact_min_deltas
@@ -2129,11 +2106,11 @@ class CrawlEngine:
                 ).agg(F.count("*").alias("n")).collect()
             }
 
-            # seen_delta projects the localCheckpointed new_rows — count
-            # THAT (cheap RDD count), not a disk re-read of the freshly
-            # written delta (file listing + scan, a whole extra job per
-            # round for a number already in memory)
-            n_new = seen_delta.count()
+            # frontier_adds is the localCheckpointed new_rows — count THAT
+            # (cheap RDD count), not a disk re-read of the freshly written
+            # add dir (file listing + scan, a whole extra job per round
+            # for a number already in memory)
+            n_new = frontier_adds.count()
             c["scheduled"] = n_new
             c["deduped"] = n_valid - n_new
             if self._bloom is not None:
@@ -2142,13 +2119,11 @@ class CrawlEngine:
                 if n_new:
                     self._bloom = update_bitmaps(
                         self._bloom,
-                        seen_delta.select("url_hash", "host_hash"),
+                        frontier_adds.select("url_hash", "host_hash"),
                         self._bloom_cfg,
                     )
                 save_bitmaps(self._bloom, os.path.join(tmp, "bloom.npz"))
             c["errors"] = spark.read.parquet(os.path.join(tmp, "errors")).count()
-            if transcript is not None:
-                res.transcript.append(transcript)
             res.counters.append(c)
 
             # O(1) manifest: per-round counters + parent pointer + this

@@ -88,7 +88,7 @@ def _bloom_engine(spark, tiny_fixture, workdir, use_bloom):
             workdir=workdir,
             use_bloom=use_bloom,
             bloom_buckets=8,
-            bloom_bits=1 << 14, collect_transcript=True),
+            bloom_bits=1 << 14),
     )
 
 
@@ -102,8 +102,8 @@ def exact_crawl(spark, tiny_fixture, tmp_path_factory):
     return _bloom_engine(spark, tiny_fixture, wd, False).run(seeds)
 
 
-def _assert_same_crawl(bloom, exact):
-    assert bloom.transcript == exact.transcript
+def _assert_same_crawl(spark, bloom, exact):
+    assert bloom.read_transcript(spark) == exact.read_transcript(spark)
     assert [c["scheduled"] for c in bloom.counters] == [
         c["scheduled"] for c in exact.counters
     ]
@@ -122,7 +122,7 @@ def test_engine_bloom_path_equals_exact_path(
     _, seeds, _ = _load(tiny_fixture)
     wd = str(tmp_path_factory.mktemp("bloom_True"))
     bloom = _bloom_engine(spark, tiny_fixture, wd, True).run(seeds)
-    _assert_same_crawl(bloom, exact_crawl)
+    _assert_same_crawl(spark, bloom, exact_crawl)
 
 
 def test_bloom_resume_loads_latest_snapshot(
@@ -150,4 +150,4 @@ def test_bloom_resume_loads_latest_snapshot(
         seeds, max_rounds=4, resume=True
     )
     assert npz_rounds() == ["round_00003"]
-    _assert_same_crawl(resumed, exact_crawl)
+    _assert_same_crawl(spark, resumed, exact_crawl)

@@ -93,30 +93,24 @@ def crawl_pair(spark, tiny_fixture, tmp_path_factory):
         config=EngineConfig(
             batch_cap=40,
             max_rounds=6,
-            workdir=str(tmp_path_factory.mktemp("crawl_work")), collect_transcript=True),
+            workdir=str(tmp_path_factory.mktemp("crawl_work"))),
     )
     result = engine.run(seeds)
     return golden, result, engine
 
 
-def test_crawl_ordering_exact(crawl_pair):
+def test_crawl_ordering_exact(crawl_pair, spark):
     golden, result, _ = crawl_pair
-    assert len(result.transcript) == len(golden.transcript)
-    for r, (got, exp) in enumerate(zip(result.transcript, golden.transcript)):
+    transcript = result.read_transcript(spark)
+    assert len(transcript) == len(golden.transcript)
+    for r, (got, exp) in enumerate(zip(transcript, golden.transcript)):
         assert got == exp, "round %d ordering mismatch:\ngot  %s\nwant %s" % (r, got, exp)
 
 
-def test_read_transcript_matches_driver_copy(crawl_pair, spark):
-    """The durable parquet transcript reconstructs the driver-side list
-    exactly (collect_transcript=False is the production default — this is
-    the opt-in read-back path)."""
-    _, result, _ = crawl_pair
-    assert result.read_transcript(spark) == result.transcript
-
-
 def test_seen_deltas_hash_bucketed(crawl_pair, spark, tmp_path):
-    """SURVEY §4.2 layout promise: per-round seen deltas are flat dirs of
-    url_hash-sorted files, every compacted dir is hive-partitioned by
+    """SURVEY §4.2 layout promise: the seen log's per-round entries are
+    the frontier's flat seed and add dirs (no round writes under
+    seen_deltas/), every compacted dir is hive-partitioned by
     sb = pmod(url_hash, seen_buckets), and the seen read carries that sb
     for every row — so the membership check can prune its scan to the
     buckets a round's links touch."""
@@ -126,17 +120,16 @@ def test_seen_deltas_hash_bucketed(crawl_pair, spark, tmp_path):
     from pyspark.sql import functions as F
 
     _, result, engine = crawl_pair
-    droot = os.path.join(result.workdir, "seen_deltas")
-    names = os.listdir(droot)
-    assert names
-    for d in names:
-        assert not d.startswith("delta="), "per-round delta %s is bucketed" % d
-        entries = [os.path.join(droot, d, e) for e in os.listdir(os.path.join(droot, d))]
-        assert not any(os.path.isdir(e) for e in entries), "delta %s has subdirs" % d
-        files = [e for e in entries if e.endswith(".parquet")]
-        assert files, "delta dir %s holds no parquet files" % d
-        for f in files:
-            assert pd.read_parquet(f)["url_hash"].is_monotonic_increasing, f
+    for s in engine.snapshots():
+        assert s["seen_deltas"] == ["frontier_log/base_seed"] + [
+            "frontier_log/add_%05d" % r for r in range(s["round"] + 1)
+        ]
+    assert os.listdir(os.path.join(result.workdir, "seen_deltas")) == []
+    for rel in engine.snapshots()[-1]["seen_deltas"]:
+        d = os.path.join(result.workdir, rel)
+        entries = [os.path.join(d, e) for e in os.listdir(d)]
+        assert not any(os.path.isdir(e) for e in entries), "entry %s has subdirs" % rel
+        assert any(e.endswith(".parquet") for e in entries), rel
     # the sb column equals pmod(url_hash, B) for every row
     B = engine.config.seen_buckets
     seen = engine.read_table("seen")
@@ -217,12 +210,13 @@ def test_resume_identical_ordering(spark, tiny_fixture, tmp_path_factory):
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
-        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd, collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd),
     )
     mk().run(seeds, max_rounds=2)  # "killed" after round 2
     result = mk().run(seeds, max_rounds=5, resume=True)
-    assert result.transcript == golden.transcript[: len(result.transcript)]
-    assert len(result.transcript) == len(golden.transcript)
+    transcript = result.read_transcript(spark)
+    assert transcript == golden.transcript[: len(transcript)]
+    assert len(transcript) == len(golden.transcript)
 
 
 def test_hot_host_path_equals_window_path(spark, tiny_fixture, tmp_path_factory):
@@ -241,11 +235,11 @@ def test_hot_host_path_equals_window_path(spark, tiny_fixture, tmp_path_factory)
             batch_cap=40,
             max_rounds=5,
             workdir=str(tmp_path_factory.mktemp("hot_work")),
-            hot_host_threshold=3, collect_transcript=True),
+            hot_host_threshold=3),
     )
     engine._MAX_HOT_HOSTS = 8
     result = engine.run(seeds)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     assert [c["deferred_by_politeness"] for c in result.counters] == [
         c["deferred_by_politeness"] for c in golden.counters
     ]
@@ -264,7 +258,8 @@ def test_snapshot_manifest_lineage_and_time_travel(crawl_pair, spark):
     assert last["snapshot_id"] == "r%05d" % (result.rounds - 1)
     lin = last["lineage"]
     assert lin["output_files"]["frontier"], "frontier snapshot lists its files"
-    assert set(lin["output_files"]) >= {"frontier", "seen", "errors", "extracted"}
+    assert set(lin["output_files"]) >= {"frontier", "errors", "extracted"}
+    assert "seen" not in lin["output_files"]  # the round writes no seen files
     # per-partition extracted-row counters sum to the round's fetch output
     base = os.path.join(result.workdir, "round_%05d" % (result.rounds - 1))
     n_extracted = spark.read.parquet(os.path.join(base, "extracted")).count()
@@ -277,7 +272,7 @@ def test_snapshot_manifest_lineage_and_time_travel(crawl_pair, spark):
     phases = [
         "counts_agg", "batch_select", "fetch_join", "extract", "links_canon",
         "dedup_antijoin", "write_errors", "write_extracted",
-        "write_transcript", "write_seen_delta", "write_frontier_deltas",
+        "write_transcript", "write_frontier_deltas",
         "write_host_state_delta",
     ]
     for s in snaps:
@@ -338,20 +333,19 @@ def test_diff_snapshots_changefeed(crawl_pair, spark):
 
 
 def test_seen_delta_log_append_only(crawl_pair, spark):
-    """north_rule scale invariant: per-round seen writes are bounded by
-    that round's NEW urls (append-only log), never the cumulative set;
-    the deltas are disjoint and their union is exactly the seen set."""
+    """north_rule scale invariant: the seen log grows per round by that
+    round's NEW urls (append-only log), never the cumulative set; the
+    entries are disjoint and their union is exactly the seen set."""
     import os
 
     golden, result, engine = crawl_pair
-    droot = os.path.join(result.workdir, "seen_deltas")
     per_delta = {
-        d: spark.read.parquet(os.path.join(droot, d)).count()
-        for d in sorted(os.listdir(droot))
+        rel: spark.read.parquet(os.path.join(result.workdir, rel)).count()
+        for rel in engine.snapshots()[-1]["seen_deltas"]
     }
-    # one delta per round, sized by that round's scheduled (new) urls
+    # one entry per round, sized by that round's scheduled (new) urls
     for c in result.counters:
-        assert per_delta["delta_%05d" % c["round"]] == c["scheduled"]
+        assert per_delta["frontier_log/add_%05d" % c["round"]] == c["scheduled"]
     # disjoint appends: sizes sum to the full seen set (no rewrite ever)
     assert sum(per_delta.values()) == len(golden.seen)
 
@@ -372,12 +366,12 @@ def test_seen_compaction_and_resume(spark, tiny_fixture, tmp_path_factory):
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=40, max_rounds=5, workdir=wd,
-            seen_compact_min_deltas=2, collect_transcript=True),
+            seen_compact_min_deltas=2),
     )
     mk().run(seeds, max_rounds=2)
     engine = mk()
     result = engine.run(seeds, max_rounds=5, resume=True)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     seen = {row.url_canon for row in engine.read_table("seen").collect()}
     assert seen == golden.seen
     # the log stays bounded: compaction keeps ≤ min_deltas dirs around
@@ -412,7 +406,7 @@ def test_frontier_log_bounded_writes(crawl_pair, spark):
     # merged view at the last snapshot: every url is either unfetched or
     # pending; none of the dequeued urls remain
     frontier = engine.read_table("frontier").toPandas()
-    dequeued = {u for roundlist in result.transcript for u in roundlist}
+    dequeued = {u for roundlist in result.read_transcript(spark) for u in roundlist}
     assert not (set(frontier.url_canon) & dequeued)
     _assert_reaped(engine)
 
@@ -433,16 +427,19 @@ def test_frontier_compaction_and_resume(spark, tiny_fixture, tmp_path_factory):
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=40, max_rounds=5, workdir=wd,
-            frontier_compact_every=2, collect_transcript=True),
+            frontier_compact_every=2),
     )
     mk().run(seeds, max_rounds=3)
     engine = mk()
     result = engine.run(seeds, max_rounds=5, resume=True)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     # compaction ran and consumed dirs were dropped: the log stays small
+    # (the add dirs the seen log still lists stay on disk; _assert_reaped
+    # checks that exactly the referenced dirs remain)
     droot = os.path.join(wd, "frontier_log")
     assert any(n.startswith("base_0") for n in os.listdir(droot))
-    assert len(os.listdir(droot)) <= 3  # base + ≤2 adds (dels are transcripts)
+    log = engine.snapshots()[-1]["frontier_log"]
+    assert 1 + len(log["adds"]) <= 3  # base + ≤2 adds (dels are transcripts)
     _assert_reaped(engine)
 
 
@@ -465,7 +462,7 @@ def test_resume_legacy_del_dirs_through_compaction(spark, tiny_fixture, tmp_path
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=40, max_rounds=5, workdir=wd,
-            frontier_compact_every=4, collect_transcript=True),
+            frontier_compact_every=4),
     )
     mk().run(seeds, max_rounds=2)  # rounds 0-1, no compaction
     legacy = ["frontier_log/del_%05d" % r for r in range(2)]
@@ -493,7 +490,7 @@ def test_resume_legacy_del_dirs_through_compaction(spark, tiny_fixture, tmp_path
 
     engine = mk()
     result = engine.run(seeds, max_rounds=5, resume=True)  # round 3 compacts
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     seen = {row.url_canon for row in engine.read_table("seen").collect()}
     assert seen == golden.seen
     assert engine.snapshots()[3]["frontier_log"]["base"] == "frontier_log/base_00003"
@@ -569,14 +566,14 @@ def test_engine_matches_refmodel_across_configs(
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=cap, max_rounds=rounds,
-            workdir=str(tmp_path_factory.mktemp("cfg_work")), collect_transcript=True,
+            workdir=str(tmp_path_factory.mktemp("cfg_work")),
             **{k: v for k, v in kw.items() if not k.startswith("_")}),
     )
     for k, v in kw.items():
         if k.startswith("_"):
             setattr(engine, k, v)
     result = engine.run(seeds)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     keys = ["fetched", "deduped", "deferred_by_politeness", "expired"]
     for got, exp in zip(result.counters, golden.counters):
         assert {k: got[k] for k in keys} == {k: exp[k] for k in keys}
@@ -586,10 +583,10 @@ def test_engine_matches_refmodel_across_configs(
 def test_crash_between_delta_write_and_commit_replays_cleanly(
     spark, tiny_fixture, tmp_path_factory
 ):
-    """Crash-window semantics: if a round dies AFTER its seen/frontier
-    delta dirs are renamed but BEFORE the manifest commit, the deltas
-    are unreferenced orphans; resume must replay the round, overwrite
-    them, and end bit-identical to an uninterrupted run (Iceberg
+    """Crash-window semantics: if a round dies AFTER its frontier add
+    dir (also its seen entry) is renamed but BEFORE the manifest commit,
+    the dir is an unreferenced orphan; resume must replay the round,
+    overwrite it, and end bit-identical to an uninterrupted run (Iceberg
     orphan-file semantics)."""
     import os
     import shutil
@@ -602,32 +599,31 @@ def test_crash_between_delta_write_and_commit_replays_cleanly(
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
-        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd, collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd),
     )
     mk().run(seeds, max_rounds=3)  # rounds 0..2 committed
     # simulate the crash window during round 2: delete the committed
-    # round dir (manifest gone) but leave its delta dirs as orphans
+    # round dir (manifest gone) but leave its add dir as an orphan
     shutil.rmtree(os.path.join(wd, "round_00002"))
-    assert os.path.isdir(os.path.join(wd, "seen_deltas", "delta_00002"))  # orphan
     assert os.path.isdir(os.path.join(wd, "frontier_log", "add_00002"))  # orphan
     engine = mk()
     result = engine.run(seeds, max_rounds=4, resume=True)  # replays r2, runs r3
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     seen = {row.url_canon for row in engine.read_table("seen").collect()}
     assert seen == golden.seen
     _assert_reaped(engine)
 
 
 def test_resume_across_hive_layout_seen_deltas(spark, tiny_fixture, tmp_path_factory):
-    """Workdirs written before per-round seen deltas went flat hold them
-    in the hive layout (``seen_deltas/delta=<name>/sb=NN``), next to a
-    compacted dir. Resuming such a MIXED log — hive per-round deltas, a
-    hive compacted dir, then this run's flat deltas, and finally a
-    compaction of all of them — must match the reference model's
-    transcript and seen set exactly."""
+    """Older workdirs hold their seen entries in other layouts: hive
+    ``seen_deltas/delta=<name>/sb=NN`` dirs (per-round and compacted),
+    and flat ``seen_deltas/delta_*`` dirs of the seen columns with a
+    stored ``first_round``. Resuming a log that MIXES those with this
+    layout's frontier add entries, and finally compacting all of them,
+    must match the reference model's transcript and seen set exactly and
+    keep every url's first_round."""
     import json
     import os
-    import shutil
 
     pages, seeds, robots = _load(tiny_fixture)
     golden = _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=5)
@@ -639,40 +635,95 @@ def test_resume_across_hive_layout_seen_deltas(spark, tiny_fixture, tmp_path_fac
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=40, max_rounds=5, workdir=wd,
-            seen_compact_min_deltas=min_deltas, collect_transcript=True),
+            seen_compact_min_deltas=min_deltas),
     )
     old = mk(0)
     old.run(seeds, max_rounds=3)  # rounds 0..2, no compaction
     mpath = os.path.join(wd, "round_00002", "manifest.json")
     with open(mpath) as f:
         manifest = json.load(f)
-    flat = manifest["seen_deltas"]
-    assert flat == ["seen_deltas/delta_seed"] + [
-        "seen_deltas/delta_%05d" % r for r in range(3)
+    adds = manifest["seen_deltas"]
+    assert adds == ["frontier_log/base_seed"] + [
+        "frontier_log/add_%05d" % r for r in range(3)
     ]
-    # rewrite the committed log in the bucketed layout: the first two
-    # deltas as one compacted dir, the rest as hive per-round deltas
-    rels = [old._write_seen_delta(old._read_seen(flat[:2]), "compact_00000")]
-    for rel in flat[2:]:
-        rels.append(old._write_seen_delta(old._read_seen([rel]), os.path.basename(rel)))
-    for rel in flat:
-        shutil.rmtree(os.path.join(wd, rel))
-    assert rels == ["seen_deltas/delta=compact_00000", "seen_deltas/delta=delta_00001",
-                    "seen_deltas/delta=delta_00002"]
+    pairs = lambda df: sorted((r.url_canon, r.first_round) for r in df.collect())  # noqa: E731
+    want = pairs(old._read_seen(adds))
+    # rewrite the committed seen log in the three layouts: the seed entry
+    # as a hive compacted dir, round 0 as a hive per-round dir, round 1 as
+    # a flat seen_deltas/delta_* dir with a first_round column, and round
+    # 2's add entry as it is. The frontier dirs stay on disk: the frontier
+    # log still references them.
+    seen_cols = ["url_canon", "url_hash", "host_hash", "first_round"]
+    rels = [
+        old._write_seen_delta(old._read_seen(adds[:1]), "compact_00000"),
+        old._write_seen_delta(old._read_seen(adds[1:2]), "delta_00000"),
+        old._write_delta(
+            old._read_seen(adds[2:3]).select(*seen_cols), "delta_00001", "seen_deltas"
+        ),
+        adds[3],
+    ]
+    assert rels == ["seen_deltas/delta=compact_00000", "seen_deltas/delta=delta_00000",
+                    "seen_deltas/delta_00001", "frontier_log/add_00002"]
     manifest["seen_deltas"] = rels
     with open(mpath, "w") as f:
         json.dump(manifest, f)
+    assert pairs(old.read_table("seen")) == want
 
-    # round 3 probes the mixed log and appends a flat delta; round 4
-    # compacts hive and flat dirs together
-    engine = mk(5)
+    # round 3 probes the mixed log and appends its add entry; round 4
+    # compacts all three layouts together
+    engine = mk(6)
     result = engine.run(seeds, max_rounds=5, resume=True)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     assert engine._seen_rels == ["seen_deltas/delta=compact_00004"]
     seen = {row.url_canon for row in engine.read_table("seen").collect()}
     assert seen == golden.seen
+    compacted = dict(pairs(engine.read_table("seen")))
+    assert [(u, compacted[u]) for u, _ in want] == want
     r3 = engine.snapshots()[3]["seen_deltas"]
-    assert r3 == rels + ["seen_deltas/delta_00003"]
+    assert r3 == rels + ["frontier_log/add_00003"]
+    _assert_reaped(engine)
+
+
+def test_seen_entries_outlive_frontier_compaction(spark, tiny_fixture, tmp_path_factory):
+    """The seen log's entries are the frontier's dirs, so a frontier
+    compaction must not take the add dirs the seen log still lists: they
+    stay on disk, and the seen read stays exact, until the seen
+    compaction replaces them — only then does the reaper delete them."""
+    import os
+
+    pages, seeds, robots = _load(tiny_fixture)
+    wd = str(tmp_path_factory.mktemp("shared_dirs_work"))
+    mk = lambda: CrawlEngine(  # noqa: E731
+        spark,
+        spark.read.parquet(tiny_fixture["pages"]),
+        _registry(),
+        robots_df=spark.read.parquet(tiny_fixture["robots"]),
+        config=EngineConfig(
+            batch_cap=40, max_rounds=5, workdir=wd,
+            frontier_compact_every=2, seen_compact_min_deltas=4),
+    )
+    shared = ["frontier_log/base_seed", "frontier_log/add_00000", "frontier_log/add_00001"]
+    engine = mk()
+    engine.run(seeds, max_rounds=2)  # round 1 compacts the frontier log
+    m = engine.snapshots()[-1]
+    assert m["frontier_log"] == {"base": "frontier_log/base_00001", "adds": [], "dels": []}
+    assert m["seen_deltas"] == shared
+    assert all(os.path.isdir(os.path.join(wd, rel)) for rel in shared)
+    _assert_reaped(engine)
+    seen = {row.url_canon for row in engine.read_table("seen").collect()}
+    assert seen == _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=2).seen
+
+    engine = mk()
+    result = engine.run(seeds, max_rounds=3, resume=True)  # round 2 compacts seen
+    m = engine.snapshots()[-1]
+    assert m["seen_deltas"] == ["seen_deltas/delta=compact_00002"]
+    assert m["frontier_log"]["adds"] == ["frontier_log/add_00002"]
+    assert not any(os.path.isdir(os.path.join(wd, rel)) for rel in shared)
+    _assert_reaped(engine)
+    golden = _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=3)
+    assert result.read_transcript(spark) == golden.transcript
+    seen = {row.url_canon for row in engine.read_table("seen").collect()}
+    assert seen == golden.seen
 
 
 def test_middleware_chain_aborts_before_fetch(spark, tiny_fixture, tmp_path_factory):
@@ -706,12 +757,12 @@ def test_middleware_chain_aborts_before_fetch(spark, tiny_fixture, tmp_path_fact
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=40, max_rounds=2,
-            workdir=str(tmp_path_factory.mktemp("mw_work")), collect_transcript=True),
+            workdir=str(tmp_path_factory.mktemp("mw_work"))),
         middlewares=[block_host0, block_host2],
     )
     result = engine.run(seeds)
     # transcript = dequeue order: identical to the no-middleware model
-    assert result.transcript[0] == base.transcript[0]
+    assert result.read_transcript(spark)[0] == base.transcript[0]
     all_errs = pd.concat(
         [
             spark.read.parquet(
@@ -770,11 +821,11 @@ def test_staged_seed_pickup_at_round_boundary(spark, tiny_fixture, tmp_path_fact
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         config=EngineConfig(batch_cap=40, max_rounds=2, workdir=wd,
-                            staged_seeds_dir=staging, collect_transcript=True),
+                            staged_seeds_dir=staging),
     )
     res = mk().run([])  # NO direct seeds: frontier starts empty
     assert res.counters[0]["staged"] == 2
-    assert res.transcript[0] == sorted([urls[0], urls[1]])
+    assert res.read_transcript(spark)[0] == sorted([urls[0], urls[1]])
     assert res.rounds == 2  # their links crawl in round 1
 
     # second out-of-band batch lands while "the job was down"; resume
@@ -784,14 +835,15 @@ def test_staged_seed_pickup_at_round_boundary(spark, tiny_fixture, tmp_path_fact
     stage("b2.json", [urls[0], fresh_url])
     res2 = mk().run([], max_rounds=4, resume=True)
     assert res2.counters[2]["staged"] == 1
-    assert urls[0] not in {u for t in res2.transcript[2:] for u in t}
+    transcript2 = res2.read_transcript(spark)
+    assert urls[0] not in {u for t in transcript2[2:] for u in t}
     engine = mk()
     seen = {r.url_canon for r in engine.read_table("seen").collect()}
     assert {urls[0], urls[1], fresh_url} <= seen
     # the staged row entered the crawl: either already fetched (FIFO
     # places staged seqs after the same round's links, so it may wait
     # behind the batch cap) or still queued in the frontier
-    crawled = {u for t in res2.transcript[2:] for u in t}
+    crawled = {u for t in transcript2[2:] for u in t}
     queued = {r.url_canon for r in engine.read_table("frontier").collect()}
     assert fresh_url in (crawled | queued)
     # high-watermark: the latest manifest records every drained staged
@@ -814,7 +866,7 @@ def test_request_fields_ride_the_frontier(spark, tiny_fixture, tmp_path_factory)
         spark,
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
-        config=EngineConfig(workdir=str(tmp_path_factory.mktemp("req_work")), collect_transcript=True),
+        config=EngineConfig(workdir=str(tmp_path_factory.mktemp("req_work"))),
     )
     seeds = [
         {
@@ -864,11 +916,10 @@ def test_bucketed_pages_fetch_pruning(spark, tiny_fixture, tmp_path_factory):
         config=EngineConfig(
             batch_cap=40, max_rounds=4, pages_buckets=B,
             workdir=str(tmp_path_factory.mktemp("bp_work")),
-            collect_transcript=True,
         ),
     )
     result = engine.run(seeds)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     keys = ["fetched", "deduped", "deferred_by_politeness", "expired"]
     for got, exp in zip(result.counters, golden.counters):
         assert {k: got[k] for k in keys} == {k: exp[k] for k in keys}
@@ -999,12 +1050,13 @@ def test_seen_probe_cap_follows_broadcast_threshold(spark, tiny_fixture, tmp_pat
 def test_engine_config_rejects_removed_knobs():
     """The broadcast caps follow one byte budget and the probe sizes are
     engine constants, so their old EngineConfig fields (and the never-set
-    ones) are gone; robots_buckets must be a positive int because the
+    ones, and the in-memory transcript copy: ``read_transcript`` reads
+    the durable one) are gone; robots_buckets must be a positive int because the
     stamp always probes the rb-bucketed robots_dim above the cap."""
     for name in (
         "default_crawl_delay", "bloom_hashes", "pages_bucket_col",
         "seen_probe_broadcast_max", "robots_broadcast_max",
-        "seen_prune_max_probe", "max_hot_hosts",
+        "seen_prune_max_probe", "max_hot_hosts", "collect_transcript",
     ):
         with pytest.raises(TypeError):
             EngineConfig(**{name: 0})
@@ -1184,14 +1236,14 @@ def test_host_state_delta_log_bounded_merge_and_compaction(
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
         config=EngineConfig(
             batch_cap=40, max_rounds=5, workdir=wd,
-            host_state_compact_min_deltas=4, collect_transcript=True),
+            host_state_compact_min_deltas=4),
     ))
     mk().run(seeds, max_rounds=2)  # "crash" after round 1's commit
     dim = os.path.join(wd, "robots_dim")
     mtime_before_resume = os.path.getmtime(dim)
     engine = mk()
     result = engine.run(seeds, resume=True)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
 
     # robots dim: bucketed hive layout, fingerprint-pinned, written once
     assert any(d.startswith("rb=") for d in os.listdir(dim))
@@ -1203,7 +1255,7 @@ def test_host_state_delta_log_bounded_merge_and_compaction(
     # (compacted-away dirs are gone — skip them; at least one must
     # remain from the post-compaction tail)
     checked = 0
-    for r, batch in enumerate(result.transcript):
+    for r, batch in enumerate(result.read_transcript(spark)):
         p = os.path.join(wd, "host_state_log", "hs_%05d" % r)
         if not os.path.isdir(p):
             continue
@@ -1305,12 +1357,13 @@ def test_sitemap_recrawl_frontier_integration(spark, tiny_fixture, tmp_path_fact
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         config=EngineConfig(batch_cap=2, max_rounds=2, workdir=os.path.join(base, "wd"),
-                            staged_seeds_dir=staging, collect_transcript=True),
+                            staged_seeds_dir=staging),
     )
     res = eng.run([{"url": u, "callbacks": ["page"]} for u in direct])
     assert res.counters[0]["staged"] == 1
-    assert res.transcript[0][0] == target
-    assert all(other not in t for t in res.transcript)
+    transcript = res.read_transcript(spark)
+    assert transcript[0][0] == target
+    assert all(other not in t for t in transcript)
 
 
 def test_robots_dim_rebuilt_when_missing(spark, tiny_fixture, tmp_path_factory):
@@ -1331,13 +1384,12 @@ def test_robots_dim_rebuilt_when_missing(spark, tiny_fixture, tmp_path_factory):
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
-        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,
-                            collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,),
     ))
     mk().run(seeds, max_rounds=2)
     shutil.rmtree(os.path.join(wd, "robots_dim"))
     res = mk().run(seeds, resume=True)
-    assert res.transcript == golden.transcript
+    assert res.read_transcript(spark) == golden.transcript
     assert os.path.isdir(os.path.join(wd, "robots_dim"))  # rebuilt
 
 
@@ -1371,8 +1423,7 @@ def test_resume_rejects_prestamping_workdir(spark, tiny_fixture, tmp_path_factor
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]),
-        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd1,
-                            collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd1,),
     )
     mk1().run(seeds, max_rounds=2)
     strip_pins(wd1)
@@ -1386,8 +1437,7 @@ def test_resume_rejects_prestamping_workdir(spark, tiny_fixture, tmp_path_factor
         spark,
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
-        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd2,
-                            collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=4, workdir=wd2,),
     )
     mk2().run(seeds, max_rounds=2)
     strip_pins(wd2)
@@ -1450,8 +1500,7 @@ def test_rebase_robots_epoch_switch(spark, tiny_fixture, tmp_path_factory):
         spark.read.parquet(tiny_fixture["pages"]),
         _registry(),
         robots_df=rb,
-        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,
-                            collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,),
     )
     mk(robots1_df).run(seeds, max_rounds=2)  # epoch 1: rounds 0-1
 
@@ -1464,12 +1513,14 @@ def test_rebase_robots_epoch_switch(spark, tiny_fixture, tmp_path_factory):
     assert m["frontier_log"]["restamped_at"] == 2
     assert m["rebase"]["at_round"] == 2
     assert m["n_frontier"] >= 0
-    _assert_reaped(eng2)  # the old epoch's base and adds are gone
+    # the old epoch's base and adds leave the frontier log; they stay on
+    # disk exactly while the seen log lists them
+    _assert_reaped(eng2)
     # idempotent: same-rules rebase is a no-op returning the manifest
     assert mk(robots2_df).rebase_robots()["rebase"] == m["rebase"]
 
     result = eng2.run(seeds, max_rounds=5, resume=True)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     keys = ["fetched", "deduped", "deferred_by_politeness", "expired"]
     assert len(result.counters) == len(golden.counters)
     for got, exp in zip(result.counters, golden.counters):
@@ -1517,8 +1568,7 @@ def test_rebase_robots_to_empty_rules(spark, tiny_fixture, tmp_path_factory):
         robots_switch=(2, {}),
     )
     wd = str(tmp_path_factory.mktemp("rebase_empty_work"))
-    cfg = lambda: EngineConfig(batch_cap=40, max_rounds=5, workdir=wd,  # noqa: E731
-                               collect_transcript=True)
+    cfg = lambda: EngineConfig(batch_cap=40, max_rounds=5, workdir=wd)  # noqa: E731
     CrawlEngine(
         spark, spark.read.parquet(tiny_fixture["pages"]), _registry(),
         robots_df=spark.read.parquet(tiny_fixture["robots"]), config=cfg(),
@@ -1532,7 +1582,7 @@ def test_rebase_robots_to_empty_rules(spark, tiny_fixture, tmp_path_factory):
     )
     eng2.rebase_robots()
     result = eng2.run(seeds, max_rounds=5, resume=True)
-    assert result.transcript == golden.transcript
+    assert result.read_transcript(spark) == golden.transcript
     for got, exp in zip(result.counters, golden.counters):
         for kk in ["fetched", "deduped", "deferred_by_politeness", "expired"]:
             assert got[kk] == exp[kk]
@@ -1576,7 +1626,6 @@ def test_pr_priority_frontier_integration(spark, tiny_fixture, tmp_path_factory)
             batch_cap=2,
             max_rounds=1,
             workdir=str(tmp_path_factory.mktemp("prprio_wd")),
-            collect_transcript=True,
         ),
     )
     res = eng.run(
@@ -1586,4 +1635,4 @@ def test_pr_priority_frontier_integration(spark, tiny_fixture, tmp_path_factory)
             for u in (u_low, u_hub)
         ]
     )
-    assert list(res.transcript[0]) == [u_hub, u_low]
+    assert list(res.read_transcript(spark)[0]) == [u_hub, u_low]

@@ -78,7 +78,7 @@ def test_robots_table_feeds_engine(spark, tiny_fixture, tmp_path_factory):
         spark.read.parquet(tiny_fixture["pages"]),
         reg,
         robots_df=robots_df,
-        config=EngineConfig(batch_cap=40, max_rounds=3, workdir=wd, collect_transcript=True),
+        config=EngineConfig(batch_cap=40, max_rounds=3, workdir=wd),
     )
     seeds = pd.read_parquet(tiny_fixture["seeds"])
     base = mk(
@@ -86,7 +86,7 @@ def test_robots_table_feeds_engine(spark, tiny_fixture, tmp_path_factory):
         str(tmp_path_factory.mktemp("rb_base")),
     ).run(seeds)
     via_txt = mk(parsed, str(tmp_path_factory.mktemp("rb_txt"))).run(seeds)
-    assert via_txt.transcript == base.transcript
+    assert via_txt.read_transcript(spark) == base.read_transcript(spark)
     assert via_txt.counters == base.counters
 
 

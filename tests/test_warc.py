@@ -79,8 +79,8 @@ def test_crawl_over_warc_pages(spark, tmp_path, tmp_path_factory):
         spark, pages, reg,
         config=EngineConfig(
             batch_cap=10, max_rounds=3,
-            workdir=str(tmp_path_factory.mktemp("warc_crawl")), collect_transcript=True),
+            workdir=str(tmp_path_factory.mktemp("warc_crawl"))),
     )
     res = eng.run([{"url": "http://w0.example/p/0", "callbacks": ["page"]}])
     assert res.total_fetched >= 3  # follows /p/1, /p/2 … through rounds
-    assert res.transcript[0] == ["http://w0.example/p/0"]
+    assert res.read_transcript(spark)[0] == ["http://w0.example/p/0"]

@@ -53,7 +53,6 @@ def one_run(use_bloom: bool) -> None:
         config=EngineConfig(
             batch_cap=N_PAGES // 6,
             workdir=workdir,
-            collect_transcript=False,
             use_bloom=use_bloom,
             bloom_buckets=64,
             bloom_bits=1 << 22,

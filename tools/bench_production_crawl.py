@@ -144,7 +144,6 @@ def main() -> None:
         config=EngineConfig(
             batch_cap=BATCH_CAP,
             workdir=wd,
-            collect_transcript=False,
             use_bloom=True,
             pages_buckets=PAGES_BUCKETS,
             hot_host_threshold=100_000,

@@ -85,7 +85,6 @@ def one_run(cpus: int, master: str | None = None) -> None:
         config=EngineConfig(
             batch_cap=N_PAGES // 2,
             workdir=workdir,
-            collect_transcript=False,
         ),
     )
     seeds = [

@@ -51,10 +51,11 @@ def main() -> None:
     for i in range(n_deltas):
         rels.append(
             eng._write_delta(
-                synth(spark, rows, "d%d" % i, parts=4).withColumn(
-                    "first_round", F.lit(i)
+                synth(spark, rows, "d%d" % i, parts=4).select(
+                    "url_canon", "url_hash", "host_hash", F.lit(i).alias("first_round")
                 ),
                 "delta_%05d" % i,
+                "seen_deltas",
             )
         )
     t_writes = time.time() - t0

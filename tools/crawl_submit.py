@@ -128,7 +128,6 @@ def main(argv=None) -> int:
             batch_cap=args.batch_cap,
             max_rounds=args.rounds,
             workdir=args.workdir,
-            collect_transcript=False,
             use_bloom=args.bloom,
             # engine-side pickup: EVERY round boundary drains the
             # staging table (not just job start), so seeds scheduled

@@ -146,8 +146,9 @@ def main() -> None:
         robots_df=spark.read.parquet(fx["robots"]),
         config=EngineConfig(
             batch_cap=25, max_rounds=3, workdir=tempfile.mkdtemp(prefix="plans_wd_"),
-            # per-round seen deltas are flat; compaction writes the
-            # sb-bucketed layout the membership-check plan (§9) prunes
+            # per-round seen entries are the frontier's flat add dirs;
+            # compaction writes the sb-bucketed layout the membership-
+            # check plan (§9) prunes
             seen_compact_min_deltas=2,
         ),
     )
