@@ -16,8 +16,12 @@ one bounded shuffle:
 1. range-partition + local sort of the candidates (the same exchange a
    global ORDER BY uses, so order across partition ids is total);
 2. per-partition row counts (P integers to the driver) prefix-summed
-   into offsets;
-3. global position = offset[pid] + local index + 1, filter ≤ k.
+   into one dense offsets array over pids 0..max_pid (a pid with no rows
+   carries the running sum);
+3. global position = element_at(offsets, pid + 1) + local index + 1,
+   filter ≤ k. The array is a literal (constant folding makes it one
+   literal at any P), so the stamp is a projection over the checkpoint:
+   no offsets DataFrame, no join, and no Python job to build one.
 
 Requires the key to be unique per row (the engine's FIFO key
 (priority, round_added, seq) is — SURVEY.md §7 hard-part #2); with ties
@@ -106,8 +110,7 @@ def ranked_topk(
     pos_col: str = "batch_pos",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    spark = df.sparkSession
-    P = num_partitions or spark.sparkContext.defaultParallelism
+    P = num_partitions or df.sparkSession.sparkContext.defaultParallelism
 
     # 0. local prune (narrow): each input partition can contribute at
     # most k rows to the global top-k.
@@ -126,16 +129,28 @@ def ranked_topk(
         r["__pid"]: r["n"]
         for r in ordered.groupBy("__pid").agg(F.count("*").alias("n")).collect()
     }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    offsets_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __offset long")
 
     # 3. exact global position, no serial stage.
     return (
-        ordered.join(F.broadcast(offsets_df), "__pid", "left")
-        .withColumn(pos_col, F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__idx") + 1)
+        ordered.withColumn(pos_col, _offsets(counts) + F.col("__idx") + 1)
         .filter(F.col(pos_col) <= k)
-        .drop("__mid", "__pid", "__idx", "__offset")
+        .drop("__mid", "__pid", "__idx")
     )
+
+
+def _offsets(counts: dict[int, int]):
+    """``__pid``'s first global position minus one, as a column: the
+    prefix sums of ``counts`` (rows per pid) in one dense literal array
+    over pids 0..max_pid, so a pid with no rows takes the running sum.
+    No rows gives the literal 0."""
+    if not counts:
+        return F.lit(0).cast("long")
+    offs, acc = [], 0
+    for pid in range(max(counts) + 1):
+        offs.append(acc)
+        acc += counts.get(pid, 0)
+    # every pid with rows is in range; the coalesce only drops the
+    # nullability Spark types element_at with, so the stamped column
+    # stays non-null in the written transcript schema
+    offsets = F.array(*[F.lit(o) for o in offs]).cast("array<bigint>")
+    return F.coalesce(F.element_at(offsets, F.col("__pid") + 1), F.lit(0))

@@ -32,15 +32,19 @@ Scale design notes (100 TB pages, 10^10-row frontier):
   host-budget filter and FIFO ranking are partition-local after that
   single shuffle. The global cap and `batch_pos` come from ranked_topk:
   a partition-local prune to <= batch_cap rows per partition, one bounded
-  range shuffle, and per-partition counts prefix-summed on the driver —
-  no TakeOrdered merge and no single-partition window at any cap
+  range shuffle, and per-partition counts prefix-summed on the driver
+  into a literal offsets array the stamp reads without a join — no
+  TakeOrdered merge and no single-partition window at any cap
   (batch_cap is the reference's queue-capacity backpressure bound,
   crawler.go:69).
 - Each round is materialized to parquet (the snapshot/checkpoint layer),
   which truncates plan lineage — round N's plan never re-executes round
   N-1's DAG.
 - All Python is Arrow-vectorized; the only per-row Python runs inside
-  pandas batches (urllib canonicalization, HTML parse).
+  pandas batches (urllib canonicalization, HTML parse). The control path
+  builds no frame from a Python list (empty placeholders come from
+  `schemas.empty_frame`, the seeds take Arrow), so a crawl runs one
+  Python worker pool: the one its UDF kernels need.
 """
 
 from __future__ import annotations
@@ -60,6 +64,7 @@ from ..functions.canon_udf import canonicalize_udf
 from ..functions.extract import extract_links as _extract_links_py
 from ..functions.htmldom import parse_html, sel_text
 from ..operators.topk import grouped_topk, ranked_topk
+from ..schemas import empty_frame
 from ..sources.fixtures import PAGES_BUCKET_COL
 from .handlers import HandlerRegistry
 
@@ -366,10 +371,14 @@ class CrawlEngine:
         if self.config.pages_buckets:
             page_cols.append(F.col(PAGES_BUCKET_COL))
         self.pages = pages_df.select(*page_cols)
+        self._robots_fp: dict | None = None
         if robots_df is None:
-            robots_df = spark.createDataFrame(
-                [], "host string, disallow array<string>, crawl_delay double"
+            robots_df = empty_frame(
+                spark, "host string, disallow array<string>, crawl_delay double"
             )
+            # what robots_fingerprint() computes over no rows (bit_xor
+            # coalesces to 0), without its job
+            self._robots_fp = {"n": 0, "fp": 0, "default_crawl_delay": 0.0}
         self.robots = robots_df.select("host", "disallow", "crawl_delay")
         # one row per host is a CORRECTNESS contract, not a convention:
         # the add-time robots stamp left-joins entering rows on host, so
@@ -377,17 +386,19 @@ class CrawlEngine:
         # join — inflating the committed expired/allowed counters and
         # double-scheduling that host's urls. ONE partial-aggregated job
         # at construction (count + count_distinct combine map-side —
-        # a single scan even at a 10^8-host table).
-        row = self.robots.agg(
-            F.count("*").alias("n"), F.countDistinct("host").alias("nd")
-        ).collect()[0]
-        n_rb = row.n
-        if n_rb and n_rb != row.nd:
-            raise ValueError(
-                "robots_df must have exactly one row per host "
-                "(deduplicate/merge rules upstream — "
-                "functions.robots.robots_table emits one row per host)"
-            )
+        # a single scan even at a 10^8-host table); none without robots.
+        n_rb = 0
+        if self._robots_fp is None:
+            row = self.robots.agg(
+                F.count("*").alias("n"), F.countDistinct("host").alias("nd")
+            ).collect()[0]
+            n_rb = row.n
+            if n_rb and n_rb != row.nd:
+                raise ValueError(
+                    "robots_df must have exactly one row per host "
+                    "(deduplicate/merge rules upstream — "
+                    "functions.robots.robots_table emits one row per host)"
+                )
         # politeness fast path: with no robots rules every budget is
         # unlimited (absent crawl_delay -> 0.0) and no URL is denied — the
         # per-host window rank, robots join and host-clock update are
@@ -397,9 +408,7 @@ class CrawlEngine:
         self._n_robots = n_rb
         self._robots_dim_path: str | None = None  # set by _ensure_robots_dim
         self._robots_small: DataFrame | None = None  # small-dim stamp cache
-        self._errors_schema = "url string, round int, error_class string, message string"
         self._parallelism = spark.sparkContext.defaultParallelism
-        self._robots_fp: dict | None = None
         self._staged_drained: set[str] = set()
         self._bloom = None
         if self.config.use_bloom:
@@ -423,7 +432,7 @@ class CrawlEngine:
         if n == 0:
             self._seed_errors, self._seed_dups = [], 0
             self._n_seeded = 0
-            return self.spark.createDataFrame([], _FRONTIER_SCHEMA)
+            return empty_frame(self.spark, _FRONTIER_SCHEMA)
 
         def col_or(name, default):
             if name in seeds.columns:
@@ -645,9 +654,6 @@ class CrawlEngine:
             c["expired"] = agg.n_expired
             tick("counts_agg")
             live = frontier.filter(~expired_cond)
-            errors_parts.append(
-                self.spark.createDataFrame([], self._errors_schema)
-            )
             allowed = live
             survivors = live
             n_allowed = agg.n - agg.n_expired  # no extra job
@@ -666,13 +672,14 @@ class CrawlEngine:
         tick("batch_select")
 
         # 6. host clock update — the round's host_state DELTA (≤ batch
-        # hosts rows; identity/empty when politeness is inactive).
+        # hosts rows).
         # crawl_delay rides the batch rows (stamped at add time,
         # identical per host — first() is deterministic), so no robots
         # join; next_time joins only the broadcast ACTIVE slice. The
         # caller appends the delta to the merge-on-read host_state log —
-        # the full table is never rebuilt or rewritten per round.
-        host_state_delta = self.spark.createDataFrame([], _HOST_STATE_SCHEMA)
+        # the full table is never rebuilt or rewritten per round. None
+        # without politeness: the caller writes no delta then.
+        host_state_delta = None
         if self._politeness_active:
             fetched_per_host = batch.groupBy("host").agg(
                 F.count("*").alias("k"),
@@ -923,7 +930,9 @@ class CrawlEngine:
         under DIFFERENT robots rules (or default delay) would silently
         reconstruct a different frontier than was committed — fail loudly
         instead. Computed in Spark (bit_xor of per-row xxhash64), never
-        collected: robots is a per-host dim table that can be huge."""
+        collected: robots is a per-host dim table that can be huge. An
+        engine built without ``robots_df`` holds the no-rows value from
+        construction and runs no job."""
         if self._robots_fp is None:
             row = self.robots.agg(
                 F.count("*").alias("n"),
@@ -1185,7 +1194,7 @@ class CrawlEngine:
             extra_paths or []
         )
         if not paths:
-            return self.spark.createDataFrame([], _HOST_STATE_SCHEMA)
+            return empty_frame(self.spark, _HOST_STATE_SCHEMA)
         return self.spark.read.schema(_HOST_STATE_SCHEMA).parquet(*paths)
 
     @staticmethod
@@ -1424,7 +1433,7 @@ class CrawlEngine:
         extracted_added = (
             self.spark.read.schema(_EXTRACT_SCHEMA).parquet(*ex_dirs)
             if ex_dirs
-            else self.spark.createDataFrame([], _EXTRACT_SCHEMA)
+            else empty_frame(self.spark, _EXTRACT_SCHEMA)
         )
 
         return {
@@ -1475,7 +1484,7 @@ class CrawlEngine:
         crawl) — while two scans keep it bounded however many deltas the
         log holds."""
         if not rels:
-            return self.spark.createDataFrame([], _SEEN_BUCKETED_SCHEMA)
+            return empty_frame(self.spark, _SEEN_BUCKETED_SCHEMA)
         base = os.path.join(self.config.workdir, "seen_deltas")
         cols = [f.name for f in _SEEN_BUCKETED_SCHEMA.fields]
         hive_rels = [r for r in rels if os.path.basename(r).startswith("delta=")]
@@ -2063,8 +2072,8 @@ class CrawlEngine:
             # merge-on-read log — the full per-host table is never
             # rewritten (the old design rewrote all |hosts| rows every
             # round: the last per-round O(|hosts|) write in the engine).
-            # Skipped entirely when politeness is inactive (the delta is
-            # the empty identity).
+            # Skipped entirely when politeness is inactive (there is no
+            # delta).
             host_state_rels_next = self._host_state_rels
             if self._politeness_active:
                 hs_rel = self._write_delta(host_state_n, "hs_%05d" % r, "host_state_log")

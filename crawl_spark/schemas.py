@@ -8,6 +8,8 @@ partitioning, and politeness.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -126,3 +128,16 @@ FORM_STRUCT = T.StructType(
         T.StructField("values", _VALUES),
     ]
 )
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """A zero-row DataFrame with exactly ``schema`` (a StructType or a
+    DDL string), planned in the JVM. ``spark.createDataFrame([], schema)``
+    sends its row list through ``parallelize`` and has Python workers
+    unpickle it: the first such frame in a session starts a Python worker
+    pool of its own, and every job that reads it runs Python tasks."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )

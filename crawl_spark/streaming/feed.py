@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.canon_udf import canonicalize_udf
+from ..schemas import empty_frame
 
 SEED_FEED_SCHEMA = T.StructType(
     [
@@ -286,7 +287,7 @@ def drain_staged_seeds(
     reports the path missing, and ``ignoreMissingFiles`` skips a file
     deleted after the DataFrame was created."""
     if not os.path.isdir(staging_dir):
-        return spark.createDataFrame([], STAGED_SCHEMA), []
+        return empty_frame(spark, STAGED_SCHEMA), []
     new = sorted(
         f
         for f in os.listdir(staging_dir)
@@ -303,7 +304,7 @@ def drain_staged_seeds(
             if e.getCondition() != "PATH_NOT_FOUND" or kept == new:
                 raise
             new = kept
-    return spark.createDataFrame([], STAGED_SCHEMA), []
+    return empty_frame(spark, STAGED_SCHEMA), []
 
 
 def rollup_windows(

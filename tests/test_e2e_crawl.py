@@ -858,6 +858,72 @@ def test_staged_seed_pickup_at_round_boundary(spark, tiny_fixture, tmp_path_fact
     assert staged_files <= drained and len(staged_files) >= 2
 
 
+@pytest.mark.parametrize("mode", ["robots", "no_robots", "staged_empty"])
+def test_crawl_control_path_builds_no_python_frames(
+    spark, tiny_fixture, tmp_path_factory, monkeypatch, mode
+):
+    """The crawl's control path stays in the JVM: no frame on it is built
+    from a Python list (``createDataFrame`` ships list rows through
+    ``parallelize``, whose Python workers form a pool beside the UDF
+    kernels' one), and the seed's pandas frame takes the Arrow path with
+    no fallback. Three ways: robots on; robots off, crawled 2 rounds and
+    resumed, where every manifest pins the fingerprint an empty robots
+    table gives; and an empty staged-seeds dir."""
+    import json
+    import os
+
+    pages, seeds, robots = _load(tiny_fixture)
+    if mode == "no_robots":
+        robots = robots.iloc[0:0]
+    golden = _run_refmodel(pages, seeds, robots, batch_cap=40, max_rounds=4)
+    base = str(tmp_path_factory.mktemp("jvm_only_" + mode))
+    wd, staged = os.path.join(base, "wd"), os.path.join(base, "staged")
+    os.makedirs(staged)
+    mk = lambda: CrawlEngine(  # noqa: E731
+        spark,
+        spark.read.parquet(tiny_fixture["pages"]),
+        _registry(),
+        robots_df=(
+            None if mode == "no_robots" else spark.read.parquet(tiny_fixture["robots"])
+        ),
+        config=EngineConfig(
+            batch_cap=40, max_rounds=4, workdir=wd,
+            staged_seeds_dir=staged if mode == "staged_empty" else None),
+    )
+
+    real = type(spark).createDataFrame
+
+    def pandas_only(self, data, *args, **kwargs):
+        assert isinstance(data, pd.DataFrame), (
+            "list-based createDataFrame on the crawl path: %s" % type(data).__name__
+        )
+        return real(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "createDataFrame", pandas_only)
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        if mode == "no_robots":
+            mk().run(seeds, max_rounds=2)
+            engine = mk()
+            result = engine.run(seeds, resume=True)
+            for m in engine.snapshots():
+                assert m["robots"] == {"n": 0, "fp": 0, "default_crawl_delay": 0.0}
+        else:
+            engine = mk()
+            result = engine.run(seeds)
+        transcript = result.read_transcript(spark)
+        seen = {row.url_canon for row in engine.read_table("seen").collect()}
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert transcript == golden.transcript
+    assert seen == golden.seen
+
+
 def test_request_fields_ride_the_frontier(spark, tiny_fixture, tmp_path_factory):
     """Full Request parity (request.go:13-32): method/form/query/cookies/
     header survive seed stamping with exact values; scheduled links get

@@ -2,7 +2,8 @@
 formulation it replaces: ``orderBy(keys).limit(k)`` + ``row_number()
 OVER (ORDER BY keys)``. Same rows, same positions, at the edges —
 empty input, k=1, k > n, more partitions than rows, and a top-k that
-sits entirely in one input partition."""
+sits entirely in one input partition. The position stamp is a literal
+offsets array, so the executed plan holds no join."""
 
 import random
 
@@ -10,7 +11,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from crawl_spark.operators.topk import ranked_topk
+from crawl_spark.operators.topk import _offsets, ranked_topk
 
 KEYS = ["priority", "round_added", "seq"]
 SCHEMA = "priority int, round_added int, seq long, url string"
@@ -94,3 +95,27 @@ def test_topk_all_in_one_input_partition(spark):
     got = _check(df, 10, num_partitions=4)
     assert {g[3] for g in got} == top
     _check(df, 12, num_partitions=4)  # crosses into partition 1
+
+
+def test_stamp_plan_has_no_join(spark):
+    """Step 3 stamps positions from a literal array: no offsets frame,
+    no broadcast join. The stamp stays a non-null column, as the
+    engine's written transcript schema has it."""
+    df = spark.createDataFrame(_rows(61), SCHEMA).repartition(7)
+    out = ranked_topk(df, KEYS, 10, num_partitions=3)
+    assert not out.schema["batch_pos"].nullable
+    assert len(out.collect()) == 10
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+
+
+def test_offsets_fill_empty_pids(spark):
+    """Pids 1, 3 and 4 hold no rows: each carries the running sum. A
+    range shuffle of deterministic input only leaves trailing pids empty
+    (every range bound is a sampled key), so the gaps are set up here
+    directly. No rows at all is the literal 0."""
+    pids = spark.range(6).select(F.col("id").cast("int").alias("__pid"))
+    got = pids.select("__pid", _offsets({0: 3, 2: 4, 5: 1}).alias("o")).orderBy("__pid")
+    assert [r.o for r in got.collect()] == [0, 3, 3, 7, 7, 7]
+    assert {r.o for r in pids.select(_offsets({}).alias("o")).collect()} == {0}
+

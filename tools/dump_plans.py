@@ -95,7 +95,8 @@ def main() -> None:
         "Distributed exact top-k (ranked_topk)",
         "rangepartitioning exchange (parallel) — contrast with "
         "orderBy().limit() whose merge and rank run in ONE task; no "
-        "SinglePartition exchange appears.",
+        "SinglePartition exchange appears. batch_pos reads a literal "
+        "offsets array: no join.",
         tk,
     )
 
